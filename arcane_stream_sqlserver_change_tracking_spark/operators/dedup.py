@@ -7,7 +7,7 @@ boundaries because the downstream (Trino) MERGE aborts on duplicate
 source keys (SURVEY.md §2.3; behavior pinned by
 src/test/scala/tests/integration/StreamRunner.scala:155-161,254-258).
 
-Three strategies (all measured in BENCH.md on the same feeds):
+Two strategies (measured in BENCH.md on the same feeds):
 
 * ``strategy="agg"`` (engine default) — ONE shuffle:
   ``groupBy(mk).agg(max_by(struct(all_cols), order))``. Skew-safe by
@@ -16,7 +16,11 @@ Three strategies (all measured in BENCH.md on the same feeds):
   reducer receives ≤ num_map_tasks rows regardless of how many changes
   hit that key — the same bound salting buys, with one fewer shuffle.
   Measured: 1.2s vs 6.9s (salted) vs 1.8s (window) on a 200k-row
-  unique-key feed; 0.5s vs 1.8s under extreme skew (local[32]).
+  unique-key feed; 0.5s vs 1.8s under extreme skew (local[32]). The
+  textbook window form,
+  ``row_number() OVER (PARTITION BY mk ORDER BY version DESC) = 1``,
+  is not offered: it cannot map-side combine (a hot key lands on one
+  task). ``top_k_per_key`` below is the window shape for k > 1.
 
 * ``strategy="salted"`` — explicit two-phase salted mitigation (the
   BASELINE.json north_star technique, kept as an explicit operator and
@@ -26,11 +30,6 @@ Three strategies (all measured in BENCH.md on the same feeds):
   1. ``groupBy(mk, salt)`` with ``max_by`` — the salt splits a hot key
      over ``num_salts`` reducers;
   2. ``groupBy(mk)`` over the ≤ num_salts survivors per key.
-
-* ``strategy="window"`` — the textbook
-  ``row_number() OVER (PARTITION BY mk ORDER BY version DESC) = 1``.
-  One shuffle on the merge key, but the window sort cannot map-side
-  combine and a hot key lands entirely on one task.
 
 Determinism under version ties: ordered by
 ``struct(sys_change_version, sys_change_operation, xxhash64(row))`` so
@@ -78,16 +77,6 @@ def latest_change_per_key(
             df.groupBy(key_col)
             .agg(F.max_by(F.struct(*cols), ordered).alias(_ROW))
             .select([F.col(f"{_ROW}.{c}").alias(c) for c in cols])
-        )
-
-    if strategy == "window":
-        w = Window.partitionBy(key_col).orderBy(
-            F.col(version_col).desc(), F.col(OPERATION_COL).desc()
-        )
-        return (
-            df.withColumn(_ROW, F.row_number().over(w))
-            .filter(F.col(_ROW) == 1)
-            .drop(_ROW)
         )
 
     if strategy != "salted":
@@ -141,17 +130,17 @@ def top_k_per_key(
         raise ValueError("k must be >= 1")
     if isinstance(keys, str):
         keys = [keys]
-    from ._join_common import check_reserved_names
+    from ._join_common import check_reserved_names, qcol
 
     # _ROW would silently overwrite a same-named input column, and a
     # rank_col colliding with an existing column would emit duplicates
     reserved = [_ROW] + ([rank_col] if rank_col is not None else [])
     check_reserved_names(reserved, ("input", df.columns))
-    order = [F.col(order_by).desc() if descending
-             else F.col(order_by).asc()]
+    order = [qcol(order_by).desc() if descending
+             else qcol(order_by).asc()]
     if tiebreak is not None:
-        order.append(F.col(tiebreak).asc())
-    w = Window.partitionBy(*[F.col(c) for c in keys]).orderBy(*order)
+        order.append(qcol(tiebreak).asc())
+    w = Window.partitionBy(*[qcol(c) for c in keys]).orderBy(*order)
     out = (df.withColumn(_ROW, F.row_number().over(w))
            .filter(F.col(_ROW) <= k))
     if rank_col is not None:

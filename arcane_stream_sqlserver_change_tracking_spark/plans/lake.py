@@ -80,7 +80,6 @@ from __future__ import annotations
 import fcntl
 import json
 import os
-import shutil
 import time
 import uuid
 from collections.abc import Sequence
@@ -195,7 +194,12 @@ class Snapshot:
     @staticmethod
     def from_json(text: str, root: str | None = None) -> "Snapshot":
         d = json.loads(text)
-        snap = Snapshot(
+        if d.get("format_version") != 2:
+            raise ValueError(
+                f"unsupported snapshot format_version "
+                f"{d.get('format_version')!r}: this engine reads format 2 "
+                f"(per-bucket manifests) only")
+        return Snapshot(
             snapshot_id=d["snapshot_id"],
             parent_id=d.get("parent_id"),
             schema=T.StructType.fromJson(d["schema"]),
@@ -206,18 +210,6 @@ class Snapshot:
             timestamp_ms=d.get("timestamp_ms", 0),
             root=root,
         )
-        if "files" in d:  # format_version 1 (round-1 tables): inline list
-            by_bucket: dict[int, list[dict[str, Any]]] = {}
-            for f in d["files"]:
-                by_bucket.setdefault(int(f["bucket"]), []).append(f)
-            snap._bucket_files = by_bucket
-            snap.bucket_manifests = {
-                b: {"path": None, "files": len(fs),
-                    "rows": sum(x.get("rows", 0) for x in fs),
-                    "bytes": sum(x.get("bytes", 0) for x in fs)}
-                for b, fs in by_bucket.items()
-            }
-        return snap
 
     # -- lazy file listing --------------------------------------------
     def files_for(self, buckets: list[int] | None = None) -> list[dict[str, Any]]:
@@ -240,7 +232,7 @@ class Snapshot:
         return self.files_for(None)
 
     def manifest_paths(self) -> list[str]:
-        return [m["path"] for m in self.bucket_manifests.values() if m.get("path")]
+        return [m["path"] for m in self.bucket_manifests.values()]
 
 
 class LakeTable:
@@ -251,7 +243,6 @@ class LakeTable:
         self.root = os.path.abspath(root)
         self.meta_dir = os.path.join(self.root, "metadata")
         self.data_dir = os.path.join(self.root, "data")
-        self.staging_dir = os.path.join(self.root, ".staging")  # v1 sweep compat
 
     # ------------------------------------------------------------------
     # metadata plumbing
@@ -451,15 +442,6 @@ class LakeTable:
                         ),
                     ):
                         manifests[b] = m
-            # v1-format parent: its manifest entries have no files on
-            # disk — materialize the inherited buckets once
-            for b, m in list(manifests.items()):
-                if m.get("path") is None:
-                    entries = parent.files_for([b])
-                    manifests[b] = self._write_bucket_manifest(
-                        snap.snapshot_id, b, entries
-                    )
-                    snap._bucket_files[b] = entries
             snap.bucket_manifests = manifests
         name = self._manifest_name(snap.snapshot_id)
         path = os.path.join(self.meta_dir, name)
@@ -1370,7 +1352,6 @@ class LakeTable:
                 full = os.path.join(self.meta_dir, name)
                 if rel not in live_manifests and _old_enough(full):
                     os.remove(full)
-        shutil.rmtree(self.staging_dir, ignore_errors=True)
         return deleted
 
     def analyze(self, included_columns: list[str] | None = None) -> dict[str, Any]:

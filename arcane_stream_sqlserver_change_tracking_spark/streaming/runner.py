@@ -7,11 +7,15 @@ Mirrors the reference graph (main.scala:69-117; SURVEY.md §3.1):
     -> throughput shaping (max_events_per_batch) -> version_chunks
     -> field filtering                            -> operators/fields.py
     -> text normalization (Arrow pandas UDF)      -> functions/text.py
-    -> merge-key synthesis + salted dedup         -> functions/keys.py, operators/dedup.py
+    -> merge-key synthesis + agg dedup            -> functions/keys.py, operators/dedup.py
     -> schema migration (additive)                -> operators/schema_evolution.py
     -> MERGE (bucket-pruned copy-on-write)        -> operators/merge.py + plans/lake.py
     -> watermark + per-partition lineage COMMIT   -> plans/lake.py (atomic)
     -> maintenance every N batches                -> plans/lake.py
+
+One drain loop (``run_incremental``) stages each chunk on a helper
+thread, the next chunk while the current one commits; one retry loop
+(``_apply_staged``) re-plans a failed plan+commit under the K3 policy.
 
 Exactly-once: the watermark is a property of the same atomic snapshot
 commit that publishes the merged files, so a crash at any point leaves
@@ -33,7 +37,7 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,30 +69,39 @@ class WatermarkNotSetError(RuntimeError):
     pass
 
 
+def _watermark_version(wm: "dict | None") -> int:
+    if wm is None or wm.get("version") is None:
+        # exact reference failure message, StreamRunner.scala:183
+        raise WatermarkNotSetError("Invalid watermark value: 'null'")
+    return int(wm["version"])
+
+
+def _bucket_stats(deduped: DataFrame) -> list:
+    """The one stats job per staged batch: rows and max version per
+    touched bucket (touched buckets, lineage, max version)."""
+    return (
+        deduped.groupBy(_BUCKET)
+        .agg(F.count("*").alias("rows"),
+             F.max(VERSION_COL).alias("last_version"))
+        .collect()
+    )
+
+
 @dataclass
 class EngineOptions:
     key_columns: tuple[str, ...] = ("conv_id", "turn_idx")
     num_buckets: int = 32
     max_events_per_batch: int = 500_000          # rowsPerGroup analog (quickstart.md:66)
-    dedup_strategy: str = "agg"   # see operators/dedup.py — partial agg
-                                  # gives the salted bound with 1 shuffle
-    num_salts: int = 16
     normalize_text_columns: tuple[str, ...] = ()  # e.g. ("text",)
     normalize_impl: str = "expr"  # "expr" (JVM codegen) | "pandas" (Arrow UDF, adds NFC)
     field_filter: FieldFilter = field(default_factory=FieldFilter)
-    broadcast_threshold_rows: int = 2_000_000     # batch keys broadcast below this
-    merge_join: str = "auto"      # "auto": broadcast the batch key set
-                                  # below broadcast_threshold_rows, else
-                                  # shuffle; "broadcast"/"shuffle" force.
-                                  # Broadcast keeps the touched-bucket
-                                  # rewrite shuffle-free (table data
-                                  # never crosses the network — the
-                                  # 100 TB default); shuffle avoids
-                                  # shipping a large key set to every
-                                  # executor but Exchanges the touched
-                                  # buckets' full content per batch —
-                                  # only sensible when batches are huge
-                                  # relative to the table
+    broadcast_threshold_rows: int = 2_000_000     # the merge broadcasts the
+                                  # batch key set at or below this many
+                                  # deduped rows (the touched-bucket
+                                  # rewrite stays shuffle-free: table data
+                                  # never crosses the network) and
+                                  # shuffles above it (no large key set
+                                  # shipped to every executor)
     max_rows_per_file: int = 1_000_000            # maxRowsPerFile analog (CRD:72-75)
     sort_within: tuple[str, ...] = ()             # sortedBy analog (docs/crd.md:117-119)
     maintenance_interval_batches: int = 60        # reference default (yaml-example:49-52)
@@ -98,28 +111,20 @@ class EngineOptions:
     analyze_included_columns: "list | None" = None
     compact_file_threshold_bytes: int = 512 * 1024 * 1024
     expire_keep_last: int = 20
-    # K3 retry policy (CRD:181-211): retry merge on transient errors
+    # K3 retry policy (CRD:181-211): one attempt budget and one backoff
+    # for every failure of a batch's plan+commit, each retry re-planned
+    # against a fresh snapshot (CdcEngine._apply_staged)
     retry_max_attempts: int = 3
     retry_base_seconds: float = 0.1
     retry_scale_factor: float = 2.0
     retry_on_message_contents: tuple[str, ...] = ()
     retry_mode: str = "never"     # reference queryRetryMode (CRD:195-210,
                                   # default never): "never" | "always" |
-                                  # "backfillOnly". Gates the COMMIT-
-                                  # CONFLICT re-plan loop: a loser of an
-                                  # optimistic-concurrency race re-reads
-                                  # the table and re-applies the staged
-                                  # batch (dedup result stays cached —
-                                  # only the anti-join + write re-run)
-                                  # up to retry_max_attempts
+                                  # "backfillOnly"
     orphan_min_age_seconds: float = 3600.0  # in-flight guard for the
                                   # orphan sweep: rename-free writes put
                                   # uncommitted files on disk, so only
                                   # old ones are sweep-eligible
-    cache_batches: bool = True    # persist() each deduped batch: the
-                                  # stats job and the merge-write job
-                                  # share it (measured ~20% faster than
-                                  # recompute-with-shuffle-reuse)
     shaper_impl: str = "static"   # T2 throughput.shaperImpl (CRD beta:433-470):
                                   # "static" (chunk = max_events_per_batch,
                                   # the advised baseline) | "memoryBound"
@@ -129,12 +134,6 @@ class EngineOptions:
                                   # tableSizeWeight, ... — spec_to_config
                                   # maps CRD camelCase to shaper kwargs);
                                   # None/{} = CRD defaults
-    cache_serialized: bool = False  # serialized (lz4) cache blocks:
-                                  # ~5-10x smaller heap footprint per
-                                  # batch, pays ser/deser CPU — for
-                                  # memory-pressured executors
-    pipeline_batches: bool = True  # overlap batch k+1 staging with
-                                   # batch k's commit (run_incremental)
     expectations: tuple = ()       # data-quality admission control
                                    # (operators/quality_gate.py rule
                                    # dicts): evaluated per batch on the
@@ -174,12 +173,14 @@ class CdcEngine:
         #: DataDog.UdsPublisher (main.scala:111,115-116)
         self.emitters = list(emitters or [])
 
-    def _emit_metrics(self, result: BatchResult) -> None:
-        """A2 parity (DeclaredMetrics/statsd publisher, main.scala:111,
+    def _record(self, result: BatchResult) -> BatchResult:
+        """Record a batch result in ``self.metrics`` and emit it. A2
+        parity (DeclaredMetrics/statsd publisher, main.scala:111,
         115-116): one JSON line per applied batch under the table root
         (the always-on local record), plus a fan-out to any configured
         emitters — statsd counters/gauges/timers with metricTags
         (docs/crd.md:33-37), see streaming/metrics.py."""
+        self.metrics.append(result)
         path = os.path.join(self.table.root, "metrics.jsonl")
         with open(path, "a") as f:
             f.write(json.dumps({"event": "batch_applied", **vars(result)}) + "\n")
@@ -187,6 +188,7 @@ class CdcEngine:
             from .metrics import emit_batch_result
 
             emit_batch_result(self.emitters, result)
+        return result
 
     # ------------------------------------------------------------------
     # bootstrap (T5 DefaultStreamBootstrapper: ensure target + epoch wm)
@@ -209,11 +211,7 @@ class CdcEngine:
         )
 
     def current_watermark(self) -> int:
-        wm = self.table.watermark()
-        if wm is None or wm.get("version") is None:
-            # exact reference failure message, StreamRunner.scala:183
-            raise WatermarkNotSetError("Invalid watermark value: 'null'")
-        return int(wm["version"])
+        return _watermark_version(self.table.watermark())
 
     # ------------------------------------------------------------------
     # per-batch apply
@@ -236,11 +234,7 @@ class CdcEngine:
         df = df.filter(F.col(VERSION_COL) > F.lit(watermark_version))
         df = self.opts.field_filter.apply(df)
         df = with_merge_key(df, list(self.opts.key_columns))
-        df = latest_change_per_key(
-            df,
-            strategy=self.opts.dedup_strategy,
-            num_salts=self.opts.num_salts,
-        )
+        df = latest_change_per_key(df)
         norm = normalize_text if self.opts.normalize_impl == "pandas" else normalize_text_expr
         for c in self.opts.normalize_text_columns:
             if c in df.columns:
@@ -251,15 +245,10 @@ class CdcEngine:
         """Prepare a batch (dedup/normalize/bucket), cache it, and run
         the ONE stats job (touched buckets, per-bucket lineage, max
         version). Independent of table mutations, so the next batch can
-        stage while the previous one commits (pipelined loop)."""
-        deduped = self._prepare(batch, watermark_version=watermark_version)
-        if self.opts.cache_batches:
-            if self.opts.cache_serialized:
-                from pyspark import StorageLevel
-
-                deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
-            else:
-                deduped = deduped.persist()
+        stage while the previous one commits (the drain loop's prefetch).
+        The cache is shared by the stats job and the merge-write job
+        (measured ~20% faster than recompute-with-shuffle-reuse)."""
+        deduped = self._prepare(batch, watermark_version=watermark_version).persist()
         try:
             if self.opts.expectations:
                 from ..operators.quality_gate import enforce_expectations
@@ -270,15 +259,9 @@ class CdcEngine:
                 enforce_expectations(
                     deduped.filter(F.col(OPERATION_COL) != "D"),
                     list(self.opts.expectations))
-            bucket_stats = (
-                deduped.groupBy(_BUCKET)
-                .agg(F.count("*").alias("rows"),
-                     F.max(VERSION_COL).alias("last_version"))
-                .collect()
-            )
+            bucket_stats = _bucket_stats(deduped)
         except Exception:
-            if self.opts.cache_batches:  # don't leak the cached batch
-                deduped.unpersist()
+            deduped.unpersist()  # don't leak the cached batch
             raise
         return deduped, bucket_stats
 
@@ -296,8 +279,7 @@ class CdcEngine:
             return self._apply_staged(deduped, bucket_stats, t0, batch_seq,
                                       staged_wm=wm, in_backfill=in_backfill)
         finally:
-            if self.opts.cache_batches:
-                deduped.unpersist()
+            deduped.unpersist()
 
     def _apply_staged(
         self,
@@ -308,34 +290,40 @@ class CdcEngine:
         staged_wm: int | None = None,
         in_backfill: bool = False,
     ) -> BatchResult:
-        """Apply a staged batch, re-planning on optimistic-concurrency
-        conflicts when ``retry_mode`` allows: the loser of a commit race
-        re-reads the table (fresh watermark, fresh touched-bucket
-        content) and re-runs only the anti-join + write — the expensive
-        dedup result is the cached ``deduped``. Mirrors the reference's
-        queryRetryMode gating of merge retries (CRD:195-210)."""
-        attempts = 0
-        delay = self.opts.retry_base_seconds
+        """Apply a staged batch under the K3 retry policy (CRD:181-211):
+        one attempt budget (``retry_max_attempts``), one exponential
+        backoff. A failed attempt is retried iff it is a
+        CommitConflictError that ``retry_mode`` allows (reference
+        queryRetryMode, CRD:195-210) or its message contains one of
+        ``retry_on_message_contents``. Every retry re-plans: it re-reads
+        the table (fresh watermark, fresh touched-bucket content) and
+        re-runs only the anti-join + write — the expensive dedup result
+        is the cached ``deduped``."""
+        opts = self.opts
+        attempt = 0
+        delay = opts.retry_base_seconds
         while True:
             try:
                 return self._apply_staged_once(
                     deduped, bucket_stats, t0, batch_seq,
                     # first attempt trusts the staging-time stale-row
-                    # guard (chunks are disjoint ascending ranges);
-                    # a conflict means another writer advanced the
-                    # table mid-flight, so retries re-guard
-                    staged_wm if attempts else None,
+                    # guard (chunks are disjoint ascending ranges); a
+                    # retry may follow another writer's commit, so it
+                    # re-guards
+                    staged_wm if attempt else None,
                 )
-            except CommitConflictError:
-                attempts += 1
-                mode = self.opts.retry_mode
-                retriable = mode == "always" or (
-                    mode == "backfillOnly" and in_backfill
+            except Exception as e:  # noqa: BLE001 - policy-driven retry
+                attempt += 1
+                conflict_retriable = isinstance(e, CommitConflictError) and (
+                    opts.retry_mode == "always"
+                    or (opts.retry_mode == "backfillOnly" and in_backfill)
                 )
-                if not retriable or attempts >= self.opts.retry_max_attempts:
+                retriable = conflict_retriable or any(
+                    s in str(e) for s in opts.retry_on_message_contents)
+                if not retriable or attempt >= opts.retry_max_attempts:
                     raise
                 time.sleep(delay)
-                delay *= self.opts.retry_scale_factor
+                delay *= opts.retry_scale_factor
 
     def _apply_staged_once(
         self,
@@ -345,22 +333,19 @@ class CdcEngine:
         batch_seq: int | None = None,
         staged_wm: int | None = None,
     ) -> BatchResult:
-        """``staged_wm`` non-None marks a conflict retry: the stale-row
-        guard re-applies against the advanced watermark before
-        re-planning.
+        """``staged_wm`` non-None marks a retry: when the watermark
+        advanced since staging, the stale-row guard re-applies against it
+        before re-planning.
 
         The whole plan (watermark, stale guard, anti-join read) is
         pinned to ONE base snapshot, and the commit validates against
         that same base — a concurrent writer landing anywhere between
         plan and commit turns this attempt into a CommitConflictError
-        (handled by the ``_apply_staged`` re-plan loop) instead of a
+        (handled by the ``_apply_staged`` retry loop) instead of a
         silent lost update."""
         base = self.table.current_snapshot()
         wm_rec = (base.watermark if base is not None else None) or {}
-        if wm_rec.get("version") is None:
-            # exact reference failure message, StreamRunner.scala:183
-            raise WatermarkNotSetError("Invalid watermark value: 'null'")
-        wm = int(wm_rec["version"])
+        wm = _watermark_version(wm_rec)
         if staged_wm is not None and wm > staged_wm:
             # another writer advanced the table since this batch was
             # staged: rows now at or below the committed watermark are
@@ -368,27 +353,16 @@ class CdcEngine:
             # re-apply the stale-row guard and refresh the bucket stats
             # (a cache-hit aggregation, not a recompute of the dedup)
             deduped = deduped.filter(F.col(VERSION_COL) > F.lit(wm))
-            bucket_stats = (
-                deduped.groupBy(_BUCKET)
-                .agg(F.count("*").alias("rows"),
-                     F.max(VERSION_COL).alias("last_version"))
-                .collect()
-            )
+            bucket_stats = _bucket_stats(deduped)
         seq = batch_seq if batch_seq is not None else int(wm_rec.get("batch_seq", 0)) + 1
-        if not bucket_stats:
-            result = BatchResult(seq, 0, 0, wm, 0, time.monotonic() - t0, skipped=True)
-            self.metrics.append(result)
-            self._emit_metrics(result)
-            return result
-        max_version = max(int(r["last_version"]) for r in bucket_stats)
+        max_version = max((int(r["last_version"]) for r in bucket_stats), default=wm)
         rows_deduped = sum(int(r["rows"]) for r in bucket_stats)
         if max_version <= wm:
-            # idempotence guard: already applied (crash-replay window)
-            result = BatchResult(seq, rows_deduped, rows_deduped, max_version, 0,
-                                 time.monotonic() - t0, skipped=True)
-            self.metrics.append(result)
-            self._emit_metrics(result)
-            return result
+            # empty batch, or idempotence guard: already applied
+            # (crash-replay window)
+            return self._record(BatchResult(
+                seq, rows_deduped, rows_deduped, max_version, 0,
+                time.monotonic() - t0, skipped=True))
         touched = sorted(int(r[_BUCKET]) for r in bucket_stats)
 
         # schema migration (K6): diff batch payload vs table schema
@@ -398,10 +372,7 @@ class CdcEngine:
         target_cols = [f.name for f in evolved.fields]
 
         existing = self.table.read(buckets=touched, snapshot_id=base.snapshot_id)
-        if self.opts.merge_join == "auto":
-            broadcast = rows_deduped <= self.opts.broadcast_threshold_rows
-        else:
-            broadcast = self.opts.merge_join == "broadcast"
+        broadcast = rows_deduped <= self.opts.broadcast_threshold_rows
         plan = plan_merge(existing, deduped, target_cols, broadcast_keys=broadcast)
         # enforce exact evolved types (lit(None) columns are NullType);
         # keep retained and upserts separate: retained rows come from
@@ -431,50 +402,29 @@ class CdcEngine:
         # same function bucket_expr uses — so each shuffle partition
         # holds whole buckets and the partitioned writer fans out
         # without another Exchange. Zero shuffles in the merge write.
-        def do_commit():
-            return self.table.replace_buckets(
-                parts=[(retained_cast, True), (upserts_cast, True)],
-                buckets=touched,
-                schema=evolved if diff.changed else None,
-                watermark={
-                    "version": max_version,
-                    "batch_seq": seq,
-                    "partitions": lineage,
-                },
-                lineage=lineage,
-                max_rows_per_file=self.opts.max_rows_per_file,
-                sort_within=list(self.opts.sort_within) or None,
-                base=base,
-            )
-
         t_commit = time.monotonic()
-        self._with_retry(do_commit)
+        self.table.replace_buckets(
+            parts=[(retained_cast, True), (upserts_cast, True)],
+            buckets=touched,
+            schema=evolved if diff.changed else None,
+            watermark={
+                "version": max_version,
+                "batch_seq": seq,
+                "partitions": lineage,
+            },
+            lineage=lineage,
+            max_rows_per_file=self.opts.max_rows_per_file,
+            sort_within=list(self.opts.sort_within) or None,
+            base=base,
+        )
         dt = time.monotonic() - t0
-        result = BatchResult(
+        return self._record(BatchResult(
             batch_seq=seq, rows_in=rows_deduped, rows_deduped=rows_deduped,
             max_version=max_version, touched_buckets=len(touched), apply_seconds=dt,
             prepare_seconds=round(pre_commit_ms / 1000.0, 3),
             commit_seconds=round(time.monotonic() - t_commit, 3),
-        )
-        self.metrics.append(result)
-        self._emit_metrics(result)
-        return result
+        ))
 
-    def _with_retry(self, fn: Callable[[], Any]) -> Any:
-        """K3 retry semantics: exponential backoff, retry only when the
-        error message contains a configured substring (CRD:195-211)."""
-        attempt = 0
-        delay = self.opts.retry_base_seconds
-        while True:
-            try:
-                return fn()
-            except Exception as e:  # noqa: BLE001 - policy-driven retry
-                attempt += 1
-                retriable = any(s in str(e) for s in self.opts.retry_on_message_contents)
-                if not retriable or attempt >= self.opts.retry_max_attempts:
-                    raise
-                time.sleep(delay)
-                delay *= self.opts.retry_scale_factor
 
     # ------------------------------------------------------------------
     # the loop (streaming replay mode)
@@ -489,14 +439,13 @@ class CdcEngine:
         count-balanced micro-batches. This is the batch-replay twin of
         the polling loop; call it per poll tick for continuous mode.
 
-        The loop is PIPELINED when ``opts.pipeline_batches``: batch
-        k+1's staging (dedup shuffle + cache + stats job — pure reads,
-        independent of table state) runs on a helper thread while batch
-        k's merge-write commits. Correct because chunks are disjoint
-        ascending version ranges: every row of chunk k+1 is above any
-        watermark chunk k can commit, so staging early with the
-        pre-loop watermark filters identically. Commits stay strictly
-        serial — the watermark sequence is untouched."""
+        Every chunk stages (dedup shuffle + cache + stats job — pure
+        reads, independent of table state) on a helper thread, and chunk
+        i+1 stages while chunk i's merge-write commits. Correct because
+        chunks are disjoint ascending version ranges: every row of chunk
+        i+1 is above any watermark chunk i can commit, so staging early
+        with the pre-loop watermark filters identically. Commits stay
+        strictly serial — the watermark sequence is untouched."""
         from concurrent.futures import ThreadPoolExecutor
 
         from .shaper import build_shaper
@@ -540,53 +489,37 @@ class CdcEngine:
                 chunks = chunks[:max_batches]
             return chunks, new_size
 
-        if not self.opts.pipeline_batches or len(chunks) == 1:
-            i = 0
-            while i < len(chunks):
-                res = self.apply_batch(chunk_filter(pending, *chunks[i]))
-                results.append(res)
-                if maintenance and res.batch_seq % self.opts.maintenance_interval_batches == 0:
-                    self.run_maintenance()
-                self._maybe_analyze(res)
-                i += 1
-                chunks, chunk_size = _rechunk(chunks, i, chunk_size)
-            return results
-
         with ThreadPoolExecutor(max_workers=1) as ex:
-            t0 = time.monotonic()
-            fut = ex.submit(self._stage, chunk_filter(pending, *chunks[0]), wm)
-            staged_pending = [fut]
+            def stage(i: int):
+                return ex.submit(self._stage, chunk_filter(pending, *chunks[i]), wm)
+
+            t_batch = time.monotonic()
+            staged = stage(0)
             try:
                 i = 0
-                while i < len(chunks):
-                    deduped, stats = staged_pending.pop(0).result()
-                    t_batch = time.monotonic() if i else t0
+                while staged is not None:
+                    deduped, stats = staged.result()
+                    if i:
+                        t_batch = time.monotonic()
                     # re-advise between batch i's staging and batch
                     # i+1's submit — the only point where the next
                     # chunk's bounds are still re-plannable
                     chunks, chunk_size = _rechunk(chunks, i + 1, chunk_size)
-                    if i + 1 < len(chunks):
-                        nxt = ex.submit(
-                            self._stage, chunk_filter(pending, *chunks[i + 1]), wm
-                        )
-                        staged_pending.append(nxt)
+                    staged = stage(i + 1) if i + 1 < len(chunks) else None
                     try:
                         res = self._apply_staged(deduped, stats, t_batch,
                                                  staged_wm=wm)
                     finally:
-                        if self.opts.cache_batches:
-                            deduped.unpersist()
+                        deduped.unpersist()
                     results.append(res)
                     if maintenance and res.batch_seq % self.opts.maintenance_interval_batches == 0:
                         self.run_maintenance()
                     self._maybe_analyze(res)
                     i += 1
             finally:
-                for f in staged_pending:
+                if staged is not None:
                     try:
-                        d, _ = f.result()
-                        if self.opts.cache_batches:
-                            d.unpersist()
+                        staged.result()[0].unpersist()
                     except Exception:
                         pass
         return results
@@ -662,8 +595,7 @@ class CdcEngine:
         diff = diff_schemas(target_schema, df.schema, system_columns=SYSTEM_COLS)
 
         def _finalize(part: DataFrame) -> DataFrame:
-            part = latest_change_per_key(part, strategy=self.opts.dedup_strategy,
-                                         num_salts=self.opts.num_salts)
+            part = latest_change_per_key(part)
             part = part.filter(F.col(OPERATION_COL) != "D")
             return part.select(
                 *[

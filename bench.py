@@ -123,8 +123,6 @@ def run_replay(spark, num_events: int, num_buckets: int = 32,
                 num_buckets=num_buckets,
                 max_events_per_batch=max(1, num_events // batches),
                 normalize_text_columns=("text",),
-                cache_serialized=os.environ.get("SPARK_GRAFT_CACHE_SER", "")
-                not in ("", "0"),
                 **(
                     {"broadcast_threshold_rows": broadcast_threshold}
                     if broadcast_threshold

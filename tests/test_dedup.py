@@ -1,4 +1,4 @@
-"""W1 — net-change dedup: window vs salted two-phase, including hot-key
+"""W1 — net-change dedup: agg vs salted two-phase, including hot-key
 skew and intra-batch multi-change keys (reference contract: MERGE source
 must have at most one row per key, SURVEY.md §2.3)."""
 
@@ -29,7 +29,7 @@ ROWS = [
 ]
 
 
-@pytest.mark.parametrize("strategy", ["agg", "window", "salted"])
+@pytest.mark.parametrize("strategy", ["agg", "salted"])
 def test_latest_per_key(spark, strategy):
     df = _changelog(spark, ROWS)
     got = {
@@ -39,7 +39,7 @@ def test_latest_per_key(spark, strategy):
     assert got == {"k1": (5, "U", "b"), "k2": (2, "I", "d"), "k3": (6, "D", None)}
 
 
-@pytest.mark.parametrize("strategy", ["agg", "window", "salted"])
+@pytest.mark.parametrize("strategy", ["agg", "salted"])
 def test_hot_key_skew(spark, strategy):
     # one key holds 90% of a 50k-row batch — the salted path splits it
     n = 50_000
@@ -64,10 +64,9 @@ def test_hot_key_skew(spark, strategy):
 
 def test_strategies_agree(spark):
     df = _changelog(spark, ROWS)
-    a = sorted(map(tuple, latest_change_per_key(df, strategy="window").collect()))
     b = sorted(map(tuple, latest_change_per_key(df, strategy="salted").collect()))
     c = sorted(map(tuple, latest_change_per_key(df, strategy="agg").collect()))
-    assert a == b == c
+    assert b == c
 
 
 def test_unknown_strategy(spark):
@@ -364,3 +363,20 @@ def test_top_k_per_key_reserved_and_collision_guards(spark):
     df2 = spark.createDataFrame([("a", 1)], ["k", "v"])
     with _pytest.raises(ValueError, match="internal working names"):
         top_k_per_key(df2, "k", "v", 1, rank_col="v")
+
+
+def test_top_k_per_key_hostile_column_names(spark):
+    """Key, order and tiebreak names with dots and backticks are taken
+    literally (no nested-field parse, no SQL syntax error)."""
+    from arcane_stream_sqlserver_change_tracking_spark.operators.dedup import (
+        top_k_per_key,
+    )
+
+    df = spark.createDataFrame(
+        [("a", 10, 1), ("a", 30, 2), ("a", 30, 3), ("b", 5, 4)],
+        ["user.id", "score`x", "row.id`"])
+    out = top_k_per_key(df, ["user.id"], "score`x", 1,
+                        tiebreak="row.id`", rank_col="r")
+    assert out.columns == ["user.id", "score`x", "row.id`", "r"]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [("a", 30, 2, 1), ("b", 5, 4, 1)]

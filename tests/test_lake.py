@@ -101,6 +101,26 @@ def test_watermark_metadata_commit(spark, lake_root):
     assert t.read().count() == 0
 
 
+def test_format_1_snapshot_fails_fast(spark, lake_root):
+    """A snapshot in the retired format 1 (inline ``files`` list, no
+    per-bucket manifests) is refused with an error naming its
+    format_version, instead of reading as an empty table."""
+    t = LakeTable(spark, lake_root)
+    t.create(SCHEMA, num_buckets=4)
+    t.append(_df(spark, 20))
+    snap = t.current_snapshot()
+    d = json.loads(snap.to_json())
+    d["format_version"] = 1
+    d["files"] = snap.files
+    del d["bucket_manifests"]
+    with open(os.path.join(t.meta_dir, t._manifest_name(snap.snapshot_id)), "w") as f:
+        json.dump(d, f)
+    with pytest.raises(ValueError, match="format_version 1"):
+        t.current_snapshot()
+    with pytest.raises(ValueError, match="format_version 1"):
+        t.read()
+
+
 def test_expire_snapshots_and_orphans(spark, lake_root):
     t = LakeTable(spark, lake_root)
     t.create(SCHEMA, num_buckets=4)

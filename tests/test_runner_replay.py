@@ -283,3 +283,104 @@ def test_metrics_jsonl_emitted(spark, lake_root):
         assert {"batch_seq", "rows_deduped", "max_version",
                 "prepare_seconds", "commit_seconds", "skipped"} <= set(rec)
     assert lines[-1]["max_version"] == 2000
+
+
+# ------------------------------------------------- K3: one retry policy
+
+def _flaky_replace_buckets(monkeypatch, fail, after_commit=False):
+    """Patch ``LakeTable.replace_buckets`` so call n raises ``fail(n)``
+    (None = no failure), before or after the real commit; returns the
+    list of call numbers."""
+    calls = []
+    real = LakeTable.replace_buckets
+
+    def flaky(self, *a, **kw):
+        calls.append(len(calls) + 1)
+        err = fail(len(calls))
+        if err is not None and not after_commit:
+            raise err
+        out = real(self, *a, **kw)
+        if err is not None:
+            raise err
+        return out
+
+    monkeypatch.setattr(LakeTable, "replace_buckets", flaky)
+    return calls
+
+
+@pytest.mark.parametrize("after_commit", [False, True])
+def test_message_retry_applies_batch_once(spark, lake_root, monkeypatch,
+                                          after_commit):
+    """A message-matched failure is retried and the batch lands exactly
+    once. Failing after the commit landed is the hard case: the retry
+    re-plans against the fresh snapshot, sees its own watermark and
+    skips, instead of re-committing a plan pinned to the stale base."""
+    eng = make_engine(spark, lake_root, retry_on_message_contents=("Query killed",),
+                      retry_base_seconds=0.01)
+    log = synth_transcripts_changelog(spark, 2000, num_convs=40, seed=21)
+    calls = _flaky_replace_buckets(
+        monkeypatch, lambda n: RuntimeError("Query killed") if n == 1 else None,
+        after_commit=after_commit)
+    results = eng.run_incremental(log)
+    assert len(results) == 1
+    assert len(calls) == (1 if after_commit else 2)
+    wm = eng.table.watermark()
+    assert wm["version"] == 2000 and wm["batch_seq"] == 1
+    got = sorted_pdf(eng.current_state(), OUT_COLS)
+    assert_tables_equal(got, oracle_final_state(log.toPandas(), PAYLOAD_COLS))
+
+
+def test_unmatched_failure_raises_and_leaves_table(spark, lake_root, monkeypatch):
+    eng = make_engine(spark, lake_root, retry_base_seconds=0.01)
+    log = synth_transcripts_changelog(spark, 2000, num_convs=40, seed=21)
+    before = eng.table.current_snapshot().snapshot_id
+    calls = _flaky_replace_buckets(
+        monkeypatch, lambda n: RuntimeError("Query killed") if n == 1 else None)
+    with pytest.raises(RuntimeError, match="Query killed"):
+        eng.run_incremental(log)
+    assert calls == [1]
+    assert eng.table.current_snapshot().snapshot_id == before
+    assert eng.table.watermark()["version"] == 0
+    assert eng.current_state().count() == 0
+
+
+def test_retry_budget_is_shared(spark, lake_root, monkeypatch):
+    """Commit conflicts and message-matched errors draw on ONE budget:
+    a failure that keeps happening stops after retry_max_attempts
+    attempts in total, not per kind of failure."""
+    from arcane_stream_sqlserver_change_tracking_spark.plans.lake import (
+        CommitConflictError,
+    )
+
+    eng = make_engine(spark, lake_root, retry_mode="always",
+                      retry_on_message_contents=("Query killed",),
+                      retry_max_attempts=4, retry_base_seconds=0.01)
+    log = synth_transcripts_changelog(spark, 2000, num_convs=40, seed=21)
+    calls = _flaky_replace_buckets(
+        monkeypatch,
+        lambda n: CommitConflictError("lost race") if n % 2
+        else RuntimeError("Query killed"))
+    with pytest.raises(RuntimeError, match="Query killed"):
+        eng.run_incremental(log)
+    assert calls == [1, 2, 3, 4]
+    assert eng.table.watermark()["version"] == 0
+
+
+def test_prefetching_drain_equals_one_chunk_per_call(spark, lake_root, tmp_path):
+    """S5: one run_incremental call over many chunks (chunk i+1 stages
+    while chunk i commits) ends in the same table as draining the same
+    log one chunk per call."""
+    log = synth_transcripts_changelog(spark, 8000, num_convs=120, seed=23)
+    one = make_engine(spark, lake_root, max_events_per_batch=2000)
+    assert len(one.run_incremental(log)) == 4
+    step = make_engine(spark, str(tmp_path / "step"), max_events_per_batch=2000)
+    calls = 0
+    while step.run_incremental(log, max_batches=1):
+        calls += 1
+    # each call re-plans the remaining backlog, so the chunk boundaries
+    # (and their count) may differ; the end state may not
+    assert calls >= 4 and step.table.watermark()["batch_seq"] == calls
+    assert one.table.watermark()["version"] == step.table.watermark()["version"] == 8000
+    got = sorted_pdf(one.current_state(), OUT_COLS)
+    assert_tables_equal(got, sorted_pdf(step.current_state(), OUT_COLS))
+    assert_tables_equal(got, oracle_final_state(log.toPandas(), PAYLOAD_COLS))
