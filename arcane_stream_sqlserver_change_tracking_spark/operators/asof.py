@@ -238,10 +238,13 @@ def asof_join_broadcast(
                & all_not_null([rk for _, rk in keys]))
         .groupBy(*[qcol(rk).alias(a)
                    for (_, rk), a in zip(keys, key_aliases)])
-        .agg(F.sort_array(F.collect_list(F.struct(
+        # sorted on the epoch alone: payload values are no sort key, so
+        # a non-orderable payload type (e.g. a map) is fine
+        .agg(F.array_sort(F.collect_list(F.struct(
             r_epoch.alias("__e"),
             qcol(right_ts).alias(_MATCH_TS),
-            *[qcol(c).alias(c) for c in payload])))
+            *[qcol(c).alias(c) for c in payload])),
+            lambda x, y: F.signum(x["__e"] - y["__e"]).cast("int"))
             .alias(arr))
     )
 

@@ -68,15 +68,20 @@ def latest_change_per_key(
     version_col: str = VERSION_COL,
     strategy: str = "agg",
     num_salts: int = 16,
+    count_col: str | None = None,
 ) -> DataFrame:
-    """Return one row per ``key_col`` — the one with max ``version_col``."""
+    """Return one row per ``key_col`` — the one with max ``version_col``.
+    With ``count_col``, each row also carries in that column the number
+    of input rows its key had; their sum is the dedup's input row count."""
+    counted = [count_col] if count_col else []
     if strategy == "agg":
         cols = df.columns
         ordered = _order_struct(df)
         return (
             df.groupBy(key_col)
-            .agg(F.max_by(F.struct(*cols), ordered).alias(_ROW))
-            .select([F.col(f"{_ROW}.{c}").alias(c) for c in cols])
+            .agg(F.max_by(F.struct(*cols), ordered).alias(_ROW),
+                 *[F.count(F.lit(1)).alias(c) for c in counted])
+            .select([F.col(f"{_ROW}.{c}").alias(c) for c in cols] + counted)
         )
 
     if strategy != "salted":
@@ -89,12 +94,14 @@ def latest_change_per_key(
     salted = df.withColumn(_SALT, F.pmod(F.xxhash64(F.col(version_col)), F.lit(num_salts)))
     phase1 = (
         salted.groupBy(key_col, _SALT)
-        .agg(F.max_by(F.struct(*cols), ordered).alias(_ROW), F.max(ordered).alias(_ORD))
+        .agg(F.max_by(F.struct(*cols), ordered).alias(_ROW), F.max(ordered).alias(_ORD),
+             *[F.count(F.lit(1)).alias(c) for c in counted])
     )
     phase2 = (
         phase1.groupBy(key_col)
-        .agg(F.max_by(F.col(_ROW), F.col(_ORD)).alias(_ROW))
-        .select([F.col(f"{_ROW}.{c}").alias(c) for c in cols])
+        .agg(F.max_by(F.col(_ROW), F.col(_ORD)).alias(_ROW),
+             *[F.sum(c).alias(c) for c in counted])
+        .select([F.col(f"{_ROW}.{c}").alias(c) for c in cols] + counted)
     )
     return phase2
 

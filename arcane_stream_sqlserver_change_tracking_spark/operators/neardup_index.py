@@ -191,10 +191,18 @@ class NearDupIndex:
         against lower-id rows of the batch itself, then append the
         batch's band rows (with kept flags) to the index. Returns the
         kept rows of ``batch``. Idempotent per ``label``: a replay
-        overwrites its own partitions and returns the same rows."""
+        overwrites its own partitions and returns the same rows.
+
+        A doc with null text gets an all-null signature that verifies
+        against nothing, so it is kept. A null id cannot be recorded or
+        joined back, so it fails the batch before anything is written."""
         spark = batch.sparkSession
         text_col = self.params["text_col"]
         id_col = self.params["id_col"]
+        if batch.where(F.col(id_col).isNull()).limit(1).count():
+            raise ValueError(
+                f"filter_batch({label!r}): null {id_col!r} in the batch; "
+                f"every doc needs an id")
         # the band pipeline (shingle explode + 16 md5-min groupBy) is
         # the batch's dominant cost and feeds FOUR consumers (both
         # sides of the in-batch self-join, the index lookup, the

@@ -3,11 +3,15 @@ parquet, playing the role Iceberg plays for the reference (K1/K2 sinks,
 main.scala:75,80-84). No Iceberg runtime jar ships in this sandbox, so
 the engine provides the same guarantees itself:
 
-* **atomic commits** — a snapshot is a JSON *manifest list* pointing at
-  per-bucket manifest files; the table's current state is a single
-  pointer file replaced with ``os.replace`` (atomic on POSIX). Readers
-  see either the old or the new snapshot, never a torn state. Mirrors
-  Iceberg's metadata-pointer swap + manifest-list indirection.
+* **atomic commits, one successor path** — a snapshot is a JSON
+  *manifest list* pointing at per-bucket manifest files; the table's
+  current state is a single pointer file replaced with ``os.replace``
+  (atomic on POSIX). Readers see either the old or the new snapshot,
+  never a torn state. Every mutation (create, overwrite, MERGE,
+  append, watermark, backfill publish, compaction, ANALYZE) commits
+  the successor of its base snapshot through ``LakeTable._commit`` —
+  as every Iceberg operation builds its successor metadata from its
+  base and publishes it with one catalog CAS.
 * **manifest tree** — data files are listed in one manifest file PER
   BUCKET; a commit writes new manifests only for the buckets it touched
   and re-points the untouched buckets at the parent snapshot's
@@ -21,9 +25,7 @@ the engine provides the same guarantees itself:
   (``data/s<snap>-<uuid>/__bucket=N/...``); nothing is ever moved. The
   files are invisible until the manifest commit references them, which
   is exactly Iceberg's object-store model: "staging" is a property of
-  the metadata, not a filesystem location. (Round-1 design staged +
-  renamed every file serially in the driver — an O(files) serial segment
-  and a POSIX-only IO model; gone.)
+  the metadata, not a filesystem location.
 * **object-store commit story** — on S3-class storage the same design
   holds: data files and manifests are immutable PUTs with unique names
   (no rename, no overwrite, no read-after-write ordering requirement);
@@ -82,7 +84,7 @@ import json
 import os
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 from contextlib import contextmanager
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -230,9 +232,6 @@ class Snapshot:
     @property
     def files(self) -> list[dict[str, Any]]:
         return self.files_for(None)
-
-    def manifest_paths(self) -> list[str]:
-        return [m["path"] for m in self.bucket_manifests.values()]
 
 
 class LakeTable:
@@ -400,49 +399,62 @@ class LakeTable:
 
     def _commit(
         self,
-        snap: Snapshot,
-        parent: Snapshot | None = None,
-        new_by_bucket: dict[int, list[dict[str, Any]]] | None = None,
+        base: Snapshot | None,
+        new_by_bucket: dict[int, list[dict[str, Any]]],
+        *,
+        schema: T.StructType | None = None,
+        properties: dict[str, Any] | None = None,
+        watermark: dict[str, Any] | None = None,
+        lineage: list[dict[str, Any]] | None = None,
     ) -> Snapshot:
-        """Write manifests for changed buckets (reusing the parent's for
-        unchanged ones), then the snapshot JSON, then atomically swing
-        the pointer. ``new_by_bucket`` carries the buckets whose content
-        this commit (re)defines; every other bucket inherits the
-        parent's manifest pointer unchanged — zero metadata rewrite for
-        untouched buckets, zero manifests for metadata-only commits."""
+        """Commit the successor of ``base`` (None only for ``create``) —
+        the one path every mutation takes. Derived from the base: id
+        ``base + 1``, its properties plus ``properties``, field ids for
+        the columns ``schema`` adds, and ``watermark``/``lineage`` unless
+        passed. ``new_by_bucket`` (re)defines buckets — an empty list
+        drops one; the rest inherit the base's manifests, so untouched
+        buckets and metadata-only commits write no manifest.
+
+        Order: bucket manifests, then the snapshot JSON published by
+        ``link`` (the CAS on the snapshot id), then the pointer swing."""
+        props = {**(base.properties if base else {}), **(properties or {})}
+        if schema is not None and (base is None or schema.json() != base.schema.json()):
+            # additive evolution: assign field ids to new columns
+            field_ids = dict(props.get("field_ids", {}))
+            max_id = int(props.get("max_field_id", len(field_ids)))
+            for f in schema.fields:
+                if f.name not in field_ids:
+                    max_id += 1
+                    field_ids[f.name] = max_id
+            props["field_ids"] = field_ids
+            props["max_field_id"] = max_id
+        else:
+            schema = base.schema
+        snap = Snapshot(
+            snapshot_id=base.snapshot_id + 1 if base else 0,
+            parent_id=base.snapshot_id if base else None,
+            schema=schema,
+            bucket_manifests=dict(base.bucket_manifests) if base else {},
+            properties=props,
+            watermark=watermark if watermark is not None else (
+                base.watermark if base else None),
+            lineage=lineage if lineage is not None else (
+                base.lineage if base else []),
+            timestamp_ms=int(time.time() * 1000),
+            root=self.root,
+        )
         os.makedirs(self.meta_dir, exist_ok=True)
-        snap.root = self.root
-        snap.timestamp_ms = int(time.time() * 1000)
-        if new_by_bucket is not None:
-            manifests: dict[int, dict[str, Any]] = {}
-            if parent is not None:
-                manifests.update(parent.bucket_manifests)
-            to_write = []
-            for b, entries in new_by_bucket.items():
-                if entries:
-                    to_write.append((b, entries))
-                    snap._bucket_files[b] = entries
-                else:
-                    manifests.pop(b, None)
-            if len(to_write) <= 2:
-                for b, entries in to_write:
-                    manifests[b] = self._write_bucket_manifest(
-                        snap.snapshot_id, b, entries
-                    )
+        for b, entries in new_by_bucket.items():
+            if entries:
+                snap._bucket_files[b] = entries
             else:
-                # independent small files, each fsynced — overlap the IO
-                with ThreadPoolExecutor(max_workers=min(16, len(to_write))) as ex:
-                    for b, m in zip(
-                        (b for b, _ in to_write),
-                        ex.map(
-                            lambda t: self._write_bucket_manifest(
-                                snap.snapshot_id, t[0], t[1]
-                            ),
-                            to_write,
-                        ),
-                    ):
-                        manifests[b] = m
-            snap.bucket_manifests = manifests
+                snap.bucket_manifests.pop(b, None)
+        # independent small files, each fsynced — overlap the IO
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            snap.bucket_manifests.update(zip(snap._bucket_files, ex.map(
+                lambda b: self._write_bucket_manifest(
+                    snap.snapshot_id, b, snap._bucket_files[b]),
+                snap._bucket_files)))
         name = self._manifest_name(snap.snapshot_id)
         path = os.path.join(self.meta_dir, name)
         # per-writer unique temp name: two writers racing on the same
@@ -505,8 +517,6 @@ class LakeTable:
             "num_buckets": num_buckets,
             "bucket_hash": BUCKET_HASH_NAME,
             "key_columns": key_columns or [],
-            "max_field_id": len(schema.fields),
-            "field_ids": {f.name: i + 1 for i, f in enumerate(schema.fields)},
             # reference parquetBloomFilterColumns (docs/crd.md:124-128);
             # normalized names, default = the merge key
             "parquet_bloom_filter_columns": [MERGE_KEY_COL],
@@ -545,11 +555,10 @@ class LakeTable:
                 f"parquet_bloom_filter_columns name unknown columns: {unknown}"
             )
         os.makedirs(self.data_dir, exist_ok=True)
-        snap = Snapshot(
-            snapshot_id=0, parent_id=None, schema=schema,
-            properties=props, watermark=watermark,
+        # field ids 1..n are assigned by _commit (every column is new)
+        return self._commit(
+            None, {}, schema=schema, properties=props, watermark=watermark
         )
-        return self._commit(snap, parent=None, new_by_bucket={})
 
     @property
     def num_buckets(self) -> int:
@@ -696,37 +705,6 @@ class LakeTable:
     # ------------------------------------------------------------------
     # write path
     # ------------------------------------------------------------------
-    def _write_data_files(
-        self,
-        df: DataFrame,
-        snapshot_id: int,
-        max_rows_per_file: int | None = None,
-        sort_within: list[str] | None = None,
-        shuffle: bool = True,
-        properties: dict[str, Any] | None = None,
-    ) -> list[dict[str, Any]]:
-        """Write ``df`` (must match the table schema) into per-bucket
-        parquet files and return manifest entries. Nothing is visible
-        until commit — the files live in a fresh per-snapshot directory
-        no manifest references yet.
-
-        ``shuffle=True``: hash-repartition by bucket first (one shuffle)
-        — for new/incoming rows whose partitioning is unrelated to the
-        bucket layout. ``shuffle=False``: rows that came FROM per-bucket
-        table files are already bucket-clustered, so we only sort within
-        partitions and let the partitioned writer fan out — rewriting a
-        bucket during MERGE then moves ZERO table data across the
-        network (the difference between shuffling MBs and TBs per batch
-        at 100 TB). Optionally sorted within partitions (reference
-        ``sortedBy`` write order, docs/crd.md:117-119) and capped at
-        ``max_rows_per_file`` rows (reference staging ``maxRowsPerFile``,
-        CRD:72-75).
-        """
-        return self._write_parts(
-            [(df, not shuffle)], snapshot_id, max_rows_per_file, sort_within,
-            properties,
-        )
-
     def _write_parts(
         self,
         parts: list[tuple[DataFrame, bool]],
@@ -736,12 +714,24 @@ class LakeTable:
         properties: dict[str, Any] | None = None,
         dirname: str | None = None,
     ) -> list[dict[str, Any]]:
-        """One write job for any mix of aligned/unaligned parts: each
-        unaligned part is bucket-repartitioned, aligned parts pass
-        through, and the union (a narrow op — partitions concatenate)
-        feeds a single partitioned write straight into the snapshot
-        directory. No renames follow — the write IS final; visibility
-        comes from the manifest commit."""
+        """Write ``parts`` (each must match the table schema) into
+        per-bucket parquet files and return manifest entries. One write
+        job for any mix of parts: the union (a narrow op — partitions
+        concatenate) feeds a single partitioned write straight into a
+        fresh per-snapshot directory. No renames follow — the write IS
+        final; nothing is visible until a commit references the files.
+
+        ``(df, False)``: hash-repartition by bucket first (one shuffle)
+        — for new/incoming rows whose partitioning is unrelated to the
+        bucket layout. ``(df, True)``: rows that came FROM per-bucket
+        table files are already bucket-clustered, so they are only
+        sorted within partitions and the partitioned writer fans out —
+        rewriting a bucket during MERGE then moves ZERO table data
+        across the network (the difference between shuffling MBs and TBs
+        per batch at 100 TB). Optionally sorted within partitions
+        (reference ``sortedBy`` write order, docs/crd.md:117-119) and
+        capped at ``max_rows_per_file`` rows (reference staging
+        ``maxRowsPerFile``, CRD:72-75)."""
         nb = self.num_buckets
         shaped = []
         for df, aligned in parts:
@@ -859,11 +849,7 @@ class LakeTable:
             if stats:
                 e["stats"] = stats
 
-        if len(entries) <= 2:
-            for e in entries:
-                _count(e)
-            return
-        with ThreadPoolExecutor(max_workers=min(16, len(entries))) as ex:
+        with ThreadPoolExecutor(max_workers=16) as ex:
             list(ex.map(_count, entries))
 
     def _footer_stats_job(
@@ -921,23 +907,14 @@ class LakeTable:
         sort_within: list[str] | None = None,
     ) -> Snapshot:
         """Replace the entire table content atomically (backfill
-        ``backfillBehavior: Overwrite``, CRD:116-118)."""
+        ``backfillBehavior: Overwrite``, CRD:116-118): a replacement of
+        every current bucket."""
         snap = self._require()
-        new_id = snap.snapshot_id + 1
-        entries = self._write_data_files(
-            df, new_id, max_rows_per_file, sort_within, properties=snap.properties
+        return self.replace_buckets(
+            df, list(snap.bucket_manifests), watermark=watermark,
+            lineage=lineage, max_rows_per_file=max_rows_per_file,
+            sort_within=sort_within, base=snap,
         )
-        by_bucket = self._group_by_bucket(entries)
-        # overwrite redefines EVERY bucket (stale ones become empty)
-        for b in snap.bucket_manifests:
-            by_bucket.setdefault(b, [])
-        new = Snapshot(
-            snapshot_id=new_id, parent_id=snap.snapshot_id, schema=snap.schema,
-            properties=dict(snap.properties),
-            watermark=watermark if watermark is not None else snap.watermark,
-            lineage=lineage or [],
-        )
-        return self._commit(new, parent=None, new_by_bucket=by_bucket)
 
     def replace_buckets(
         self,
@@ -980,36 +957,18 @@ class LakeTable:
                 f"{snap.snapshot_id} since this replacement was planned; "
                 f"re-read and re-apply"
             )
-        new_id = snap.snapshot_id + 1
-        props = dict(snap.properties)
-        new_schema = snap.schema
-        if schema is not None and schema.json() != snap.schema.json():
-            # additive evolution: assign field ids to new columns
-            field_ids = dict(props.get("field_ids", {}))
-            max_id = int(props.get("max_field_id", len(field_ids)))
-            for f in schema.fields:
-                if f.name not in field_ids:
-                    max_id += 1
-                    field_ids[f.name] = max_id
-            props["field_ids"] = field_ids
-            props["max_field_id"] = max_id
-            new_schema = schema
-        if properties_update:
-            props.update(properties_update)
         entries = self._write_parts(
             parts if parts is not None else [(df, False)],
-            new_id, max_rows_per_file, sort_within, properties=props,
+            snap.snapshot_id + 1, max_rows_per_file, sort_within,
+            properties={**snap.properties, **(properties_update or {})},
         )
         by_bucket = self._group_by_bucket(entries)
         for b in buckets or []:
             by_bucket.setdefault(int(b), [])  # touched but emptied
-        new = Snapshot(
-            snapshot_id=new_id, parent_id=snap.snapshot_id,
-            schema=new_schema, properties=props,
-            watermark=watermark if watermark is not None else snap.watermark,
-            lineage=lineage or [],
+        return self._commit(
+            snap, by_bucket, schema=schema, properties=properties_update,
+            watermark=watermark, lineage=lineage or [],
         )
-        return self._commit(new, parent=snap, new_by_bucket=by_bucket)
 
     def append(
         self,
@@ -1020,34 +979,24 @@ class LakeTable:
         sort_within: list[str] | None = None,
     ) -> Snapshot:
         snap = self._require()
-        new_id = snap.snapshot_id + 1
-        entries = self._write_data_files(
-            df, new_id, max_rows_per_file, sort_within, properties=snap.properties
+        entries = self._write_parts(
+            [(df, False)], snap.snapshot_id + 1, max_rows_per_file,
+            sort_within, properties=snap.properties,
         )
         by_bucket = self._group_by_bucket(entries)
         # appended buckets = parent entries + new entries
         for b in list(by_bucket):
             by_bucket[b] = snap.files_for([b]) + by_bucket[b]
-        new = Snapshot(
-            snapshot_id=new_id, parent_id=snap.snapshot_id, schema=snap.schema,
-            properties=dict(snap.properties),
-            watermark=watermark if watermark is not None else snap.watermark,
-            lineage=lineage or [],
+        return self._commit(
+            snap, by_bucket, watermark=watermark, lineage=lineage or []
         )
-        return self._commit(new, parent=snap, new_by_bucket=by_bucket)
 
     def set_watermark(self, watermark: dict[str, Any]) -> Snapshot:
         """Metadata-only commit that (re)sets the watermark — used to
         prepare the epoch watermark, mirroring ``MsSqlWatermark.epoch``
         preparation in StreamRunner.scala:188-192. Writes the snapshot
         JSON only — zero manifests."""
-        snap = self._require()
-        new = Snapshot(
-            snapshot_id=snap.snapshot_id + 1, parent_id=snap.snapshot_id,
-            schema=snap.schema, properties=dict(snap.properties),
-            watermark=watermark, lineage=snap.lineage,
-        )
-        return self._commit(new, parent=snap, new_by_bucket={})
+        return self._commit(self._require(), {}, watermark=watermark)
 
     # ------------------------------------------------------------------
     # restartable backfill (reference T4: ShardStagingProcessor +
@@ -1163,28 +1112,14 @@ class LakeTable:
             )
         snap = self._require()
         entries = [e for es in state["completed"].values() for e in es]
+        # the staged shards redefine EVERY bucket (stale ones drop)
         by_bucket = self._group_by_bucket(entries)
         for b in snap.bucket_manifests:
             by_bucket.setdefault(b, [])
-        props = dict(snap.properties)
-        new_schema = snap.schema
-        if schema is not None and schema.json() != snap.schema.json():
-            field_ids = dict(props.get("field_ids", {}))
-            max_id = int(props.get("max_field_id", len(field_ids)))
-            for f in schema.fields:
-                if f.name not in field_ids:
-                    max_id += 1
-                    field_ids[f.name] = max_id
-            props["field_ids"] = field_ids
-            props["max_field_id"] = max_id
-            new_schema = schema
-        new = Snapshot(
-            snapshot_id=snap.snapshot_id + 1, parent_id=snap.snapshot_id,
-            schema=new_schema, properties=props,
-            watermark=watermark if watermark is not None else snap.watermark,
+        committed = self._commit(
+            snap, by_bucket, schema=schema, watermark=watermark,
             lineage=lineage or [],
         )
-        committed = self._commit(new, parent=None, new_by_bucket=by_bucket)
         self.abort_backfill()  # staged files are now snapshot-referenced
         return committed
 
@@ -1255,43 +1190,48 @@ class LakeTable:
             ]
         )
 
+    def _referenced(self, snapshot_ids: Iterable[int]) -> tuple[set[str], set[str]]:
+        """(data file paths, bucket-manifest paths) referenced by the
+        given snapshots — the live set of maintenance. Snapshots share
+        the manifests of untouched buckets, so each distinct manifest
+        file is read once."""
+        data: set[str] = set()
+        manifests: set[str] = set()
+        for sid in snapshot_ids:
+            for m in self.snapshot(sid).bucket_manifests.values():
+                if m["path"] in manifests:
+                    continue
+                manifests.add(m["path"])
+                with open(os.path.join(self.root, m["path"])) as fh:
+                    data.update(e["path"] for e in json.load(fh)["files"])
+        return data, manifests
+
     def expire_snapshots(self, keep_last: int = 5) -> list[str]:
         """Drop old snapshot manifests and delete data files (and bucket
         manifests) only referenced by them. Returns deleted file paths."""
         log = self.snapshot_log()
         keep = set(log[-keep_last:]) if keep_last else set(log)
-        cur = self._require().snapshot_id
-        keep.add(cur)
-        live: set[str] = set()
-        live_manifests: set[str] = set()
-        for sid in keep:
-            s = self.snapshot(sid)
-            for f in s.files:
-                live.add(f["path"])
-            live_manifests.update(s.manifest_paths())
-        # load every expired snapshot's listing BEFORE deleting anything:
-        # expired snapshots may share bucket-manifest files with each
-        # other, and deletion order must not break a later load
-        expired = []
-        for sid in log:
-            if sid in keep:
-                continue
-            s = self.snapshot(sid)
-            expired.append((sid, s.files, s.manifest_paths()))
-        deleted: list[str] = []
-        for sid, files, mpaths in expired:
-            for f in files:
-                if f["path"] not in live:
-                    p = os.path.join(self.root, f["path"])
-                    if os.path.exists(p):
-                        os.remove(p)
-                        deleted.append(f["path"])
-            for mp in mpaths:
-                if mp not in live_manifests:
-                    p = os.path.join(self.root, mp)
-                    if os.path.exists(p):
-                        os.remove(p)
+        keep.add(self._require().snapshot_id)
+        expired = [sid for sid in log if sid not in keep]
+        live, live_manifests = self._referenced(keep)
+        # read every expired snapshot's listing BEFORE deleting anything:
+        # expired snapshots share bucket-manifest files with each other,
+        # and deletion order must not break a later read
+        dead, dead_manifests = self._referenced(expired)
+        # snapshots first: a crash part-way leaves unreferenced files for
+        # the orphan sweep, never a snapshot naming a deleted file
+        for sid in expired:
             os.remove(os.path.join(self.meta_dir, self._manifest_name(sid)))
+        deleted: list[str] = []
+        for rel in sorted(dead - live):
+            p = os.path.join(self.root, rel)
+            if os.path.exists(p):
+                os.remove(p)
+                deleted.append(rel)
+        for rel in dead_manifests - live_manifests:
+            p = os.path.join(self.root, rel)
+            if os.path.exists(p):
+                os.remove(p)
         return deleted
 
     def remove_orphan_files(self, older_than_seconds: float = 3600.0) -> list[str]:
@@ -1307,8 +1247,7 @@ class LakeTable:
         files older than the threshold are eligible — never a write in
         progress. Pass 0 only when no other writer can be active."""
         now = time.time()
-        live: set[str] = set()
-        live_manifests: set[str] = set()
+        live, live_manifests = self._referenced(self.snapshot_log())
         # staged backfill shards are not snapshot-referenced yet but
         # MUST survive the sweep — they are the resume state of a
         # crashed full reload (reference keeps staging tables alive
@@ -1316,13 +1255,7 @@ class LakeTable:
         bf = self.backfill_state()
         if bf:
             for es in bf.get("completed", {}).values():
-                for e in es:
-                    live.add(e["path"])
-        for sid in self.snapshot_log():
-            s = self.snapshot(sid)
-            for f in s.files:
-                live.add(f["path"])
-            live_manifests.update(s.manifest_paths())
+                live.update(e["path"] for e in es)
         deleted: list[str] = []
 
         def _old_enough(full: str) -> bool:
@@ -1412,11 +1345,5 @@ class LakeTable:
                 }
                 for c in included_columns
             }
-        new = Snapshot(
-            snapshot_id=snap.snapshot_id + 1, parent_id=snap.snapshot_id,
-            schema=snap.schema,
-            properties={**snap.properties, "stats": stats},
-            watermark=snap.watermark, lineage=snap.lineage,
-        )
-        self._commit(new, parent=snap, new_by_bucket={})
+        self._commit(snap, {}, properties={"stats": stats})
         return stats

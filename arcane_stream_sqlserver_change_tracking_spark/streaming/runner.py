@@ -60,9 +60,11 @@ from ..plans.lake import CommitConflictError, LakeTable
 from ..sources.incremental import chunk_filter, incremental_read, version_chunks
 
 _BUCKET = "__b"
+#: per deduped row, the rows its key had entering the dedup
+_ROWS_IN = "__n"
 
 #: system columns never promoted into the evolving payload schema
-SYSTEM_COLS = (VERSION_COL, OPERATION_COL, MERGE_KEY_COL, _BUCKET)
+SYSTEM_COLS = (VERSION_COL, OPERATION_COL, MERGE_KEY_COL, _BUCKET, _ROWS_IN)
 
 
 class WatermarkNotSetError(RuntimeError):
@@ -77,11 +79,13 @@ def _watermark_version(wm: "dict | None") -> int:
 
 
 def _bucket_stats(deduped: DataFrame) -> list:
-    """The one stats job per staged batch: rows and max version per
-    touched bucket (touched buckets, lineage, max version)."""
+    """The one stats job per staged batch: rows, rows entering the
+    dedup and max version per touched bucket (touched buckets, lineage,
+    max version, ``rows_in``)."""
     return (
         deduped.groupBy(_BUCKET)
         .agg(F.count("*").alias("rows"),
+             F.sum(_ROWS_IN).alias("rows_in"),
              F.max(VERSION_COL).alias("last_version"))
         .collect()
     )
@@ -216,10 +220,13 @@ class CdcEngine:
     # ------------------------------------------------------------------
     # per-batch apply
     # ------------------------------------------------------------------
-    def _prepare(self, batch: DataFrame, watermark_version: int = 0) -> DataFrame:
+    def _prepare(self, batch: DataFrame, watermark_version: int = 0,
+                 count_rows_in: bool = False) -> DataFrame:
         """normalize names -> field filter -> merge key -> salted dedup
         -> text normalize -> bucket id. All lazily declared; one cached
-        result per batch.
+        result per batch. ``count_rows_in`` keeps the dedup's per-key
+        input row count as a system column, so the stats job sums the
+        rows entering dedup (no job of its own).
 
         Text normalization runs AFTER dedup on purpose: it is per-row
         deterministic, so normalizing only the surviving row per key is
@@ -234,7 +241,8 @@ class CdcEngine:
         df = df.filter(F.col(VERSION_COL) > F.lit(watermark_version))
         df = self.opts.field_filter.apply(df)
         df = with_merge_key(df, list(self.opts.key_columns))
-        df = latest_change_per_key(df)
+        df = latest_change_per_key(
+            df, count_col=_ROWS_IN if count_rows_in else None)
         norm = normalize_text if self.opts.normalize_impl == "pandas" else normalize_text_expr
         for c in self.opts.normalize_text_columns:
             if c in df.columns:
@@ -247,8 +255,11 @@ class CdcEngine:
         version). Independent of table mutations, so the next batch can
         stage while the previous one commits (the drain loop's prefetch).
         The cache is shared by the stats job and the merge-write job
-        (measured ~20% faster than recompute-with-shuffle-reuse)."""
-        deduped = self._prepare(batch, watermark_version=watermark_version).persist()
+        (measured ~20% faster than recompute-with-shuffle-reuse).
+        Returns ``(deduped, bucket_stats, rows_in)``; ``rows_in`` (rows
+        entering dedup) is summed by the stats job."""
+        deduped = self._prepare(batch, watermark_version=watermark_version,
+                                count_rows_in=True).persist()
         try:
             if self.opts.expectations:
                 from ..operators.quality_gate import enforce_expectations
@@ -263,7 +274,7 @@ class CdcEngine:
         except Exception:
             deduped.unpersist()  # don't leak the cached batch
             raise
-        return deduped, bucket_stats
+        return deduped, bucket_stats, sum(int(r["rows_in"]) for r in bucket_stats)
 
     def apply_batch(
         self,
@@ -274,10 +285,11 @@ class CdcEngine:
         """Apply one micro-batch (the foreachBatch body)."""
         t0 = time.monotonic()
         wm = self.current_watermark()
-        deduped, bucket_stats = self._stage(batch, wm)
+        deduped, bucket_stats, rows_in = self._stage(batch, wm)
         try:
-            return self._apply_staged(deduped, bucket_stats, t0, batch_seq,
-                                      staged_wm=wm, in_backfill=in_backfill)
+            return self._apply_staged(deduped, bucket_stats, rows_in, t0,
+                                      batch_seq, staged_wm=wm,
+                                      in_backfill=in_backfill)
         finally:
             deduped.unpersist()
 
@@ -285,6 +297,7 @@ class CdcEngine:
         self,
         deduped: DataFrame,
         bucket_stats,
+        rows_in: int,
         t0: float,
         batch_seq: int | None = None,
         staged_wm: int | None = None,
@@ -305,7 +318,7 @@ class CdcEngine:
         while True:
             try:
                 return self._apply_staged_once(
-                    deduped, bucket_stats, t0, batch_seq,
+                    deduped, bucket_stats, rows_in, t0, batch_seq,
                     # first attempt trusts the staging-time stale-row
                     # guard (chunks are disjoint ascending ranges); a
                     # retry may follow another writer's commit, so it
@@ -329,6 +342,7 @@ class CdcEngine:
         self,
         deduped: DataFrame,
         bucket_stats,
+        rows_in: int,
         t0: float,
         batch_seq: int | None = None,
         staged_wm: int | None = None,
@@ -361,7 +375,7 @@ class CdcEngine:
             # empty batch, or idempotence guard: already applied
             # (crash-replay window)
             return self._record(BatchResult(
-                seq, rows_deduped, rows_deduped, max_version, 0,
+                seq, rows_in, rows_deduped, max_version, 0,
                 time.monotonic() - t0, skipped=True))
         touched = sorted(int(r[_BUCKET]) for r in bucket_stats)
 
@@ -377,7 +391,7 @@ class CdcEngine:
         # enforce exact evolved types (lit(None) columns are NullType);
         # keep retained and upserts separate: retained rows come from
         # this table's own per-bucket files, so their write skips the
-        # bucket shuffle (plans/lake.py _write_data_files aligned path)
+        # bucket shuffle (an aligned part of plans/lake.py _write_parts)
         def _cast(df: DataFrame) -> DataFrame:
             return df.select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name) for f in evolved.fields]
@@ -419,7 +433,7 @@ class CdcEngine:
         )
         dt = time.monotonic() - t0
         return self._record(BatchResult(
-            batch_seq=seq, rows_in=rows_deduped, rows_deduped=rows_deduped,
+            batch_seq=seq, rows_in=rows_in, rows_deduped=rows_deduped,
             max_version=max_version, touched_buckets=len(touched), apply_seconds=dt,
             prepare_seconds=round(pre_commit_ms / 1000.0, 3),
             commit_seconds=round(time.monotonic() - t_commit, 3),
@@ -498,7 +512,7 @@ class CdcEngine:
             try:
                 i = 0
                 while staged is not None:
-                    deduped, stats = staged.result()
+                    deduped, stats, rows_in = staged.result()
                     if i:
                         t_batch = time.monotonic()
                     # re-advise between batch i's staging and batch
@@ -507,8 +521,8 @@ class CdcEngine:
                     chunks, chunk_size = _rechunk(chunks, i + 1, chunk_size)
                     staged = stage(i + 1) if i + 1 < len(chunks) else None
                     try:
-                        res = self._apply_staged(deduped, stats, t_batch,
-                                                 staged_wm=wm)
+                        res = self._apply_staged(deduped, stats, rows_in,
+                                                 t_batch, staged_wm=wm)
                     finally:
                         deduped.unpersist()
                     results.append(res)
@@ -605,47 +619,30 @@ class CdcEngine:
                 ]
             )
 
+        write_opts = dict(max_rows_per_file=self.opts.max_rows_per_file,
+                          sort_within=list(self.opts.sort_within) or None)
+        if shard_parts is None and shards <= 1:
+            self.table.overwrite(_finalize(df), watermark=watermark, **write_opts)
+            return
         if shard_parts is not None:
-            # caller-sharded restartable reload: each part staged as its
-            # own shard; source-pushable predicates make the resume path
-            # re-read only unfinished slices (read_backfill_shards)
-            bid = backfill_id or f"v{version}x{len(shard_parts)}"
-            for shard, raw in enumerate(shard_parts):
-                part = with_merge_key(_prep(raw), list(self.opts.key_columns))
-                self.table.stage_backfill_shard(
-                    _finalize(part), bid, shard, len(shard_parts),
-                    max_rows_per_file=self.opts.max_rows_per_file,
-                    sort_within=list(self.opts.sort_within) or None,
-                )
-            self.table.commit_backfill(
-                bid, watermark=watermark,
-                schema=diff.evolved if diff.changed else None,
-            )
-            return
-
-        if shards <= 1:
-            self.table.overwrite(
-                _finalize(df),
-                watermark=watermark,
-                max_rows_per_file=self.opts.max_rows_per_file,
-                sort_within=list(self.opts.sort_within) or None,
-            )
-            return
-
+            # caller-sharded: source-pushable predicates make the resume
+            # path re-read only unfinished slices (read_backfill_shards)
+            parts = [with_merge_key(_prep(raw), list(self.opts.key_columns))
+                     for raw in shard_parts]
+        else:
+            # shard i owns buckets ≡ i (mod shards) — bucket slices
+            # partition the key space, so per-shard dedup is globally
+            # correct and every staged file lands in a bucket the final
+            # commit expects
+            bucket = bucket_expr(MERGE_KEY_COL, self.table.num_buckets)
+            parts = [df.filter(F.pmod(bucket, F.lit(shards)) == F.lit(shard))
+                     for shard in range(shards)]
         # deterministic resume identity: same capture version + shard
-        # count = same backfill. Shard i owns buckets ≡ i (mod shards) —
-        # bucket slices partition the key space, so per-shard dedup is
-        # globally correct and every staged file lands in a bucket the
-        # final commit expects.
-        bid = backfill_id or f"v{version}x{shards}"
-        bucket = bucket_expr(MERGE_KEY_COL, self.table.num_buckets)
-        for shard in range(shards):
-            part = df.filter(F.pmod(bucket, F.lit(shards)) == F.lit(shard))
+        # count = same backfill
+        bid = backfill_id or f"v{version}x{len(parts)}"
+        for shard, part in enumerate(parts):
             self.table.stage_backfill_shard(
-                _finalize(part), bid, shard, shards,
-                max_rows_per_file=self.opts.max_rows_per_file,
-                sort_within=list(self.opts.sort_within) or None,
-            )
+                _finalize(part), bid, shard, len(parts), **write_opts)
         self.table.commit_backfill(
             bid, watermark=watermark,
             schema=diff.evolved if diff.changed else None,

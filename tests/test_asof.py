@@ -314,6 +314,21 @@ def test_broadcast_variant_tolerance_and_nulls(spark):
     assert got == {1: "new", 2: None, 3: None, 4: None}
 
 
+def test_broadcast_variant_accepts_non_orderable_payload(spark):
+    """A map payload is not orderable; the packed array sorts on the
+    epoch alone, so the broadcast variant matches like the shuffle one."""
+    L = spark.createDataFrame([(1, 5.0, 1), (1, 12.0, 2), (2, 3.0, 3)],
+                              "k int, ts double, lid int")
+    R = spark.createDataFrame(
+        [(1, 10.0, {"v": 10}), (1, 1.0, {"v": 1}), (2, 4.0, {"v": 4})],
+        "k int, rts double, m map<string,int>")
+    got = {r.lid: r.m for r in asof_join_broadcast(
+        L, R, ["k"], "ts", "rts", payload=["m"]).collect()}
+    want = {r.lid: r.m for r in asof_join(
+        L, R, ["k"], "ts", "rts", payload=["m"]).collect()}
+    assert got == want == {1: {"v": 1}, 2: {"v": 10}, 3: None}
+
+
 def test_broadcast_variant_plan_never_shuffles_the_fact_side(spark,
                                                              sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")

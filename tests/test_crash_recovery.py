@@ -6,6 +6,7 @@ StreamRunner.scala:250-258 + staging sweep docs/crd.md:45-48)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from arcane_stream_sqlserver_change_tracking_spark.plans.lake import LakeTable
@@ -45,7 +46,7 @@ def test_crash_between_write_and_commit(spark, lake_root):
     batch2 = eng._prepare(
         log.filter(F.col("sys_change_version") > 2000), watermark_version=2000
     ).drop("__b")
-    orphan_entries = table._write_data_files(batch2, snapshot_id=999)
+    orphan_entries = table._write_parts([(batch2, False)], snapshot_id=999)
     assert orphan_entries and len(os.listdir(table.data_dir)) > n_files_before
 
     # readers are unaffected: current snapshot and state are unchanged
@@ -381,3 +382,148 @@ def test_sigkill_mid_replay_resumes_via_spec_cli(spark, tmp_path):
     got = {tuple(r) for r in resumed.read().select(*cols).collect()}
     want = {tuple(r) for r in LakeTable(spark, clean_root).read().select(*cols).collect()}
     assert got == want and len(got) > 0
+
+
+# ---------------------------------------------------------------------------
+# crash-point matrix over the one commit path (LakeTable._commit)
+# ---------------------------------------------------------------------------
+CRASH_POINTS = ("after_write", "after_manifests", "after_link", "after_swing")
+
+
+class SimulatedCrash(RuntimeError):
+    pass
+
+
+def _arm_crash(monkeypatch, point):
+    """Make the next commit die at ``point``, once:
+
+    * ``after_write`` — data files written, nothing recorded;
+    * ``after_manifests`` — bucket manifests and the snapshot temp file
+      written, snapshot not yet published by ``link``;
+    * ``after_link`` — snapshot published, pointer not swung;
+    * ``after_swing`` — pointer swung, post-commit steps not run."""
+    fired = {"x": False}
+
+    def once():
+        if fired["x"]:
+            return False
+        fired["x"] = True
+        return True
+
+    if point == "after_write":
+        real = LakeTable._write_parts
+
+        def write(self, *a, **kw):
+            entries = real(self, *a, **kw)
+            if once():
+                raise SimulatedCrash(point)
+            return entries
+
+        monkeypatch.setattr(LakeTable, "_write_parts", write)
+    elif point == "after_manifests":
+        real_link = os.link
+
+        def link(src, dst, *a, **kw):
+            if once():
+                raise SimulatedCrash(point)
+            return real_link(src, dst, *a, **kw)
+
+        monkeypatch.setattr(os, "link", link)
+    else:
+        real_swing = LakeTable._swing_pointer
+
+        def swing(self, name):
+            if point == "after_link" and once():
+                raise SimulatedCrash(point)
+            swung = real_swing(self, name)
+            if point == "after_swing" and once():
+                raise SimulatedCrash(point)
+            return swung
+
+        monkeypatch.setattr(LakeTable, "_swing_pointer", swing)
+
+
+def _restart(run):
+    """A restarted process. When the crashed commit had published its
+    snapshot, the first attempt rolls it forward and loses with a
+    CommitConflictError (the documented loser contract); the next
+    attempt re-plans against it."""
+    from arcane_stream_sqlserver_change_tracking_spark.plans.lake import (
+        CommitConflictError,
+    )
+
+    try:
+        run()
+    except CommitConflictError:
+        run()
+
+
+def _version_advances(table, version):
+    """Snapshots that moved the watermark to ``version``."""
+    wm = [(table.snapshot(s).watermark or {}).get("version")
+          for s in table.snapshot_log()]
+    return sum(1 for a, b in zip(wm, wm[1:]) if b == version != a)
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+@pytest.mark.parametrize("scenario", ["cdc_batch", "sharded_backfill"])
+def test_crash_point_matrix(spark, lake_root, monkeypatch, scenario, point):
+    """A crash at every sub-step of the commit path: readers see the old
+    or the new snapshot, never a torn one; a restart converges to the
+    oracle with the watermark advanced once; the orphan sweep leaves no
+    unreferenced data file."""
+    eng = _engine(spark, lake_root)
+    table = eng.table
+    cdc_log = synth_transcripts_changelog(spark, 2000, num_convs=20, seed=11)
+    eng.run_incremental(cdc_log.filter(F.col("sys_change_version") <= 1000))
+    old_state = sorted_pdf(eng.current_state(), OUT_COLS)
+    old_version = table.watermark()["version"]
+    if scenario == "cdc_batch":
+        log = cdc_log
+        new_version = 2000
+
+        def run(engine):
+            engine.run_incremental(log)
+    else:
+        log = synth_transcripts_changelog(spark, 1500, num_convs=20, seed=12)
+        new_version = 3000
+
+        def run(engine):
+            engine.backfill(log, capture_version=new_version, shards=2)
+    want = oracle_final_state(log.toPandas(), PAYLOAD_COLS)
+
+    _arm_crash(monkeypatch, point)
+    with pytest.raises(SimulatedCrash):
+        run(eng)
+    monkeypatch.undo()
+
+    # old or new, never torn: the current snapshot's files all exist and
+    # its rows are exactly the state its watermark names
+    snap = table.current_snapshot()
+    assert all(os.path.exists(os.path.join(table.root, f["path"]))
+               for f in snap.files)
+    seen = sorted_pdf(eng.current_state(), OUT_COLS)
+    if snap.watermark["version"] == old_version:
+        assert point != "after_swing"
+        assert_tables_equal(seen, old_state)
+    else:
+        assert point == "after_swing"
+        assert snap.watermark["version"] == new_version
+        assert_tables_equal(seen, want)
+
+    restarted = CdcEngine(spark, LakeTable(spark, lake_root),
+                          EngineOptions(num_buckets=8))
+    _restart(lambda: run(restarted))
+    assert_tables_equal(sorted_pdf(restarted.current_state(), OUT_COLS), want)
+    assert table.watermark()["version"] == new_version
+    assert _version_advances(table, new_version) == 1
+    assert table.backfill_state() is None
+
+    table.remove_orphan_files(older_than_seconds=0)
+    referenced = {f["path"] for s in table.snapshot_log()
+                  for f in table.snapshot(s).files}
+    on_disk = {
+        os.path.relpath(os.path.join(d, n), table.root)
+        for d, _, names in os.walk(table.data_dir) for n in names
+    }
+    assert on_disk <= referenced

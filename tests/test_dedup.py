@@ -32,11 +32,12 @@ ROWS = [
 @pytest.mark.parametrize("strategy", ["agg", "salted"])
 def test_latest_per_key(spark, strategy):
     df = _changelog(spark, ROWS)
+    # count_col: how many input rows each key had
     got = {
-        r[MERGE_KEY_COL]: (r[VERSION_COL], r[OPERATION_COL], r["payload"])
-        for r in latest_change_per_key(df, strategy=strategy).collect()
+        r[MERGE_KEY_COL]: (r[VERSION_COL], r[OPERATION_COL], r["payload"], r["n"])
+        for r in latest_change_per_key(df, strategy=strategy, count_col="n").collect()
     }
-    assert got == {"k1": (5, "U", "b"), "k2": (2, "I", "d"), "k3": (6, "D", None)}
+    assert got == {"k1": (5, "U", "b", 3), "k2": (2, "I", "d", 1), "k3": (6, "D", None, 2)}
 
 
 @pytest.mark.parametrize("strategy", ["agg", "salted"])

@@ -234,10 +234,6 @@ def test_manifest_commit_scales_with_touched_buckets(spark, lake_root):
     be one bucket manifest + the (small) snapshot JSON — O(touched
     buckets' files), never a relisting of all 10k files (VERDICT r1
     item 6)."""
-    import json
-
-    from arcane_stream_sqlserver_change_tracking_spark.plans.lake import Snapshot
-
     t = LakeTable(spark, lake_root)
     t.create(SCHEMA, num_buckets=32)
     base = t.current_snapshot()
@@ -246,9 +242,7 @@ def test_manifest_commit_scales_with_touched_buckets(spark, lake_root):
          "bytes": 1_000_000, "rows": 5_000}
         for i in range(10_000)
     ]
-    s1 = Snapshot(snapshot_id=1, parent_id=0, schema=base.schema,
-                  properties=dict(base.properties))
-    t._commit(s1, parent=base, new_by_bucket=t._group_by_bucket(entries))
+    t._commit(base, t._group_by_bucket(entries))
 
     before = set(os.listdir(t.meta_dir))
     full_listing_bytes = sum(
@@ -257,9 +251,7 @@ def test_manifest_commit_scales_with_touched_buckets(spark, lake_root):
     )
     one = [{"path": "data/synthetic/new.parquet", "bucket": 7,
             "bytes": 1, "rows": 1}]
-    s2 = Snapshot(snapshot_id=2, parent_id=1, schema=base.schema,
-                  properties=dict(base.properties))
-    t._commit(s2, parent=t.current_snapshot(), new_by_bucket={7: one})
+    t._commit(t.current_snapshot(), {7: one})
 
     written = set(os.listdir(t.meta_dir)) - before
     new_manifests = [n for n in written if n.startswith("m-")]
@@ -313,7 +305,6 @@ def test_concurrent_commit_conflict_detected(spark, lake_root):
     stand untouched."""
     from arcane_stream_sqlserver_change_tracking_spark.plans.lake import (
         CommitConflictError,
-        Snapshot,
     )
 
     t = LakeTable(spark, lake_root)
@@ -325,13 +316,9 @@ def test_concurrent_commit_conflict_detected(spark, lake_root):
     assert t._require().snapshot_id == 1
 
     # writer 2, still on base 0, tries to commit the same snapshot id
-    loser = Snapshot(
-        snapshot_id=1, parent_id=0, schema=stale_base.schema,
-        properties=dict(stale_base.properties),
-        watermark={"version": 99, "batch_seq": 1, "partitions": []},
-    )
     with pytest.raises(CommitConflictError, match="concurrent writer"):
-        t._commit(loser, parent=stale_base, new_by_bucket={})
+        t._commit(stale_base, {}, watermark={
+            "version": 99, "batch_seq": 1, "partitions": []})
     # winner's state intact
     assert t.watermark()["version"] == 10
     assert t._require().snapshot_id == 1
@@ -408,13 +395,9 @@ def test_crashed_winner_rolls_forward(spark, lake_root):
     assert t._require().snapshot_id == 0  # pointer still at base
 
     # next committer loses AND repairs
-    mine = Snapshot(
-        snapshot_id=1, parent_id=0, schema=base.schema,
-        properties=dict(base.properties),
-        watermark={"version": 8, "batch_seq": 1, "partitions": []},
-    )
     with pytest.raises(CommitConflictError):
-        t._commit(mine, parent=base, new_by_bucket={})
+        t._commit(base, {}, watermark={
+            "version": 8, "batch_seq": 1, "partitions": []})
     # roll-forward happened: the crashed winner is now current
     cur = t._require()
     assert cur.snapshot_id == 1 and cur.watermark["version"] == 7
@@ -495,7 +478,7 @@ def test_orphan_sweep_spares_fresh_files(spark, lake_root):
     older_than_seconds (a concurrent writer's in-flight batch)."""
     t = LakeTable(spark, lake_root)
     t.create(SCHEMA, num_buckets=2)
-    in_flight = t._write_data_files(_df(spark, 50), snapshot_id=99)
+    in_flight = t._write_parts([(_df(spark, 50), False)], snapshot_id=99)
     assert in_flight
     # default threshold: fresh files untouched
     assert t.remove_orphan_files() == []
@@ -515,7 +498,7 @@ def test_orphan_sweep_removes_stranded_manifests(spark, lake_root):
     stray = os.path.join(t.meta_dir, "m-s00000099-b00001-deadbeef.json")
     with open(stray, "w") as f:
         f.write('{"bucket": 1, "files": []}')
-    live_before = set(t._require().manifest_paths())
+    live_before = {m["path"] for m in t._require().bucket_manifests.values()}
     t.remove_orphan_files(older_than_seconds=0)
     assert not os.path.exists(stray)
     # live manifests untouched

@@ -123,11 +123,15 @@ def test_engine_emits_to_configured_collector(spark, lake_root):
         [(i + 1, "U", f"k{i % 5}", i) for i in range(20)],
         f"{VERSION_COL} long, {OPERATION_COL} string, k string, v long",
     )
-    eng.run_incremental(log.withColumn("v", F.col("v")))
+    [res] = eng.run_incremental(log.withColumn("v", F.col("v")))
     lines = _drain(srv)
     srv.close()
-    # rows_in == rows_applied == the DEDUPED count by engine design
-    # (pre-dedup cardinality would cost an extra count job per batch)
+    # rows_in counts the rows entering dedup (the dedup's per-key
+    # counts, summed by the stats job: no extra Spark job);
+    # rows_applied the rows left after it
+    assert res.rows_in == 20 and res.rows_in > res.rows_deduped == 5
+    assert any(l.startswith("cdc.batch.rows_in:20|c|#batch_seq:1,stream_id:s1")
+               for l in lines), lines
     assert any(l.startswith("cdc.batch.rows_applied:5|c|#batch_seq:1,stream_id:s1")
                for l in lines), lines
     assert any(l.startswith("cdc.batch.version:20|g") for l in lines), lines

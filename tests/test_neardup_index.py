@@ -149,3 +149,30 @@ def test_param_mismatch_fails_fast(tmp_path):
 def test_bad_band_split_rejected(tmp_path):
     with pytest.raises(ValueError, match="divisible"):
         NearDupIndex(str(tmp_path / "idx"), num_perms=16, num_bands=5)
+
+
+def test_null_text_docs_are_kept(spark, tmp_path):
+    """A doc with null text has an all-null signature that verifies
+    against nothing: it is kept, in its own batch and against the index
+    (null-text docs share their band hashes)."""
+    idx = NearDupIndex(str(tmp_path / "idx"), num_perms=16, num_bands=4,
+                       threshold=0.5, buckets=8)
+    rows = [(1, _BASE * 6), (2, None), (3, None)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    assert sorted(r.doc_id for r in idx.filter_batch(docs, "b0").collect()) \
+        == [1, 2, 3]
+    later = spark.createDataFrame([(4, None), (5, _BASE * 6 + "tail one")],
+                                  "doc_id long, text string")
+    assert [r.doc_id for r in idx.filter_batch(later, "b1").collect()] == [4]
+
+
+def test_null_doc_id_fails_fast(spark, tmp_path):
+    p = tmp_path / "idx"
+    idx = NearDupIndex(str(p), num_perms=16, num_bands=4, threshold=0.5,
+                       buckets=8)
+    docs = spark.createDataFrame([(1, _BASE), (None, _BASE + "x")],
+                                 "doc_id long, text string")
+    with pytest.raises(ValueError, match="null 'doc_id'"):
+        idx.filter_batch(docs, "b0")
+    # nothing was recorded for the failed batch
+    assert not any(n.startswith("batch_label=") for n in os.listdir(p))
