@@ -168,8 +168,8 @@ def q_j2_merge_as_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = latest_change_per_key(
         log.filter(F.col(VERSION_COL) > 5000), strategy="salted"
     )
-    cols = [MERGE_KEY_COL, "user_id", VERSION_COL, "event_type", "value"]
-    plan = plan_merge(base.select(*cols), changes, cols)
+    base = base.select(MERGE_KEY_COL, "user_id", VERSION_COL, "event_type", "value")
+    plan = plan_merge(base, changes, base.schema)
     return plan.new_state.select(
         "user_id", F.col(VERSION_COL).alias("last_version"), "event_type", "value"
     )

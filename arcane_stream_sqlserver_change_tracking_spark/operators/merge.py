@@ -35,6 +35,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.keys import MERGE_KEY_COL, OPERATION_COL, OP_DELETE
 
@@ -46,10 +47,24 @@ class MergePlan:
     retained: DataFrame
 
 
+def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Project ``df`` onto ``schema``: columns ``df`` lacks (dropped at
+    the source but retained in the target) become NULL — reference
+    SchemaMigrationTests.scala:209-212 — and every column is cast to the
+    schema's type, in the schema's order."""
+    return df.select(
+        *[
+            (F.col(f.name) if f.name in df.columns else F.lit(None))
+            .cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ]
+    )
+
+
 def plan_merge(
     existing: DataFrame,
     deduped_batch: DataFrame,
-    target_columns: list[str],
+    schema: T.StructType,
     broadcast_keys: bool = True,
 ) -> MergePlan:
     """Compute the post-merge content of the touched buckets.
@@ -59,28 +74,16 @@ def plan_merge(
                          ``sys_change_operation`` and all payload columns
                          (missing payload columns allowed — null-padded,
                          mirroring drop-column retention semantics).
-    ``target_columns`` — the (possibly evolved) target schema column order.
+    ``schema``         — the (possibly evolved) target schema; ``retained``
+                         and ``upserts`` are both conformed to it.
     """
     keys = deduped_batch.select(MERGE_KEY_COL)
     if broadcast_keys:
         keys = F.broadcast(keys)
 
-    upserts = deduped_batch.filter(F.col(OPERATION_COL) != F.lit(OP_DELETE))
-    # project to target schema; columns the batch lacks (dropped at the
-    # source but retained in the target) become NULL — reference
-    # SchemaMigrationTests.scala:209-212
-    projected = upserts.select(
-        *[
-            (F.col(c) if c in upserts.columns else F.lit(None)).alias(c)
-            for c in target_columns
-        ]
-    )
-    existing_proj = existing.select(
-        *[
-            (F.col(c) if c in existing.columns else F.lit(None)).alias(c)
-            for c in target_columns
-        ]
-    )
-    retained = existing_proj.join(keys, on=MERGE_KEY_COL, how="left_anti")
-    new_state = retained.unionByName(projected)
-    return MergePlan(new_state=new_state, upserts=projected, retained=retained)
+    upserts = conform(
+        deduped_batch.filter(F.col(OPERATION_COL) != F.lit(OP_DELETE)), schema)
+    # the anti-join moves the key column first; conform restores order
+    retained = conform(existing.join(keys, on=MERGE_KEY_COL, how="left_anti"), schema)
+    new_state = retained.unionByName(upserts)
+    return MergePlan(new_state=new_state, upserts=upserts, retained=retained)

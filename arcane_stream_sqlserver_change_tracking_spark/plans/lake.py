@@ -7,8 +7,8 @@ the engine provides the same guarantees itself:
   *manifest list* pointing at per-bucket manifest files; the table's
   current state is a single pointer file replaced with ``os.replace``
   (atomic on POSIX). Readers see either the old or the new snapshot,
-  never a torn state. Every mutation (create, overwrite, MERGE,
-  append, watermark, backfill publish, compaction, ANALYZE) commits
+  never a torn state. Every mutation (create, MERGE, append,
+  watermark, backfill publish, compaction, ANALYZE) commits
   the successor of its base snapshot through ``LakeTable._commit`` —
   as every Iceberg operation builds its successor metadata from its
   base and publishes it with one catalog CAS.
@@ -897,24 +897,6 @@ class LakeTable:
         for e in entries:
             by_bucket.setdefault(int(e["bucket"]), []).append(e)
         return by_bucket
-
-    def overwrite(
-        self,
-        df: DataFrame,
-        watermark: dict[str, Any] | None = None,
-        lineage: list[dict[str, Any]] | None = None,
-        max_rows_per_file: int | None = None,
-        sort_within: list[str] | None = None,
-    ) -> Snapshot:
-        """Replace the entire table content atomically (backfill
-        ``backfillBehavior: Overwrite``, CRD:116-118): a replacement of
-        every current bucket."""
-        snap = self._require()
-        return self.replace_buckets(
-            df, list(snap.bucket_manifests), watermark=watermark,
-            lineage=lineage, max_rows_per_file=max_rows_per_file,
-            sort_within=sort_within, base=snap,
-        )
 
     def replace_buckets(
         self,

@@ -16,6 +16,10 @@ Mirrors the reference graph (main.scala:69-117; SURVEY.md §3.1):
 One drain loop (``run_incremental``) stages each chunk on a helper
 thread, the next chunk while the current one commits; one retry loop
 (``_apply_staged``) re-plans a failed plan+commit under the K3 policy.
+One backfill path (``backfill``, T4): ``overwrite`` stages every
+bucket-slice shard (one when ``shards=1``) and publishes them in one
+commit, restartable at any shard count; ``merge`` is the CDC apply
+committed at the backfill's version.
 
 Exactly-once: the watermark is a property of the same atomic snapshot
 commit that publishes the merged files, so a crash at any point leaves
@@ -54,7 +58,7 @@ from ..functions.keys import (
 from ..functions.text import normalize_text, normalize_text_expr
 from ..operators.dedup import latest_change_per_key
 from ..operators.fields import FieldFilter
-from ..operators.merge import plan_merge
+from ..operators.merge import conform, plan_merge
 from ..operators.schema_evolution import diff_schemas
 from ..plans.lake import CommitConflictError, LakeTable
 from ..sources.incremental import chunk_filter, incremental_read, version_chunks
@@ -220,27 +224,32 @@ class CdcEngine:
     # ------------------------------------------------------------------
     # per-batch apply
     # ------------------------------------------------------------------
-    def _prepare(self, batch: DataFrame, watermark_version: int = 0,
+    def _shape(self, batch: DataFrame) -> DataFrame:
+        """normalize names -> field filter -> merge key: the row shape
+        shared by CDC batches and both backfill behaviors."""
+        df = self.opts.field_filter.apply(normalize_column_names(batch))
+        return with_merge_key(df, list(self.opts.key_columns))
+
+    def _prepare(self, batch: DataFrame, watermark_version: "int | None" = 0,
                  count_rows_in: bool = False) -> DataFrame:
-        """normalize names -> field filter -> merge key -> salted dedup
-        -> text normalize -> bucket id. All lazily declared; one cached
-        result per batch. ``count_rows_in`` keeps the dedup's per-key
-        input row count as a system column, so the stats job sums the
-        rows entering dedup (no job of its own).
+        """shape (``_shape``) -> stale-row guard -> salted dedup -> text
+        normalize -> bucket id. All lazily declared; one cached result
+        per batch. ``count_rows_in`` keeps the dedup's per-key input row
+        count as a system column, so the stats job sums the rows
+        entering dedup (no job of its own).
 
         Text normalization runs AFTER dedup on purpose: it is per-row
         deterministic, so normalizing only the surviving row per key is
         semantically identical and the Arrow batches (and the dedup
         shuffles before them) carry ~dup-factor× fewer rows."""
-        df = normalize_column_names(batch)
-        # stale-row guard: rows at or below the committed watermark are
-        # already reflected in the table (batches apply in version
-        # order), so a redelivered batch with PARTIAL overlap (shifted
-        # boundaries after a crash) must not let an old version regress
-        # a newer table row — batch-level skip alone can't catch that
-        df = df.filter(F.col(VERSION_COL) > F.lit(watermark_version))
-        df = self.opts.field_filter.apply(df)
-        df = with_merge_key(df, list(self.opts.key_columns))
+        df = self._shape(batch)
+        if watermark_version is not None:
+            # stale-row guard (None for a merge backfill): rows at or
+            # below the committed watermark are already in the table, so
+            # a redelivered batch with PARTIAL overlap (shifted boundaries
+            # after a crash) must not let an old version regress a newer
+            # table row — batch-level skip alone can't catch that
+            df = df.filter(F.col(VERSION_COL) > F.lit(watermark_version))
         df = latest_change_per_key(
             df, count_col=_ROWS_IN if count_rows_in else None)
         norm = normalize_text if self.opts.normalize_impl == "pandas" else normalize_text_expr
@@ -249,7 +258,7 @@ class CdcEngine:
                 df = df.withColumn(c, norm(F.col(c)))
         return df.withColumn(_BUCKET, bucket_expr(MERGE_KEY_COL, self.table.num_buckets))
 
-    def _stage(self, batch: DataFrame, watermark_version: int):
+    def _stage(self, batch: DataFrame, watermark_version: "int | None"):
         """Prepare a batch (dedup/normalize/bucket), cache it, and run
         the ONE stats job (touched buckets, per-bucket lineage, max
         version). Independent of table mutations, so the next batch can
@@ -280,16 +289,19 @@ class CdcEngine:
         self,
         batch: DataFrame,
         batch_seq: int | None = None,
-        in_backfill: bool = False,
+        backfill_version: int | None = None,
     ) -> BatchResult:
-        """Apply one micro-batch (the foreachBatch body)."""
+        """Apply one micro-batch (the foreachBatch body).
+        ``backfill_version`` makes it a merge backfill committed at that
+        version (``_apply_staged_once``)."""
         t0 = time.monotonic()
         wm = self.current_watermark()
-        deduped, bucket_stats, rows_in = self._stage(batch, wm)
+        deduped, bucket_stats, rows_in = self._stage(
+            batch, wm if backfill_version is None else None)
         try:
             return self._apply_staged(deduped, bucket_stats, rows_in, t0,
                                       batch_seq, staged_wm=wm,
-                                      in_backfill=in_backfill)
+                                      backfill_version=backfill_version)
         finally:
             deduped.unpersist()
 
@@ -301,7 +313,7 @@ class CdcEngine:
         t0: float,
         batch_seq: int | None = None,
         staged_wm: int | None = None,
-        in_backfill: bool = False,
+        backfill_version: int | None = None,
     ) -> BatchResult:
         """Apply a staged batch under the K3 retry policy (CRD:181-211):
         one attempt budget (``retry_max_attempts``), one exponential
@@ -324,12 +336,14 @@ class CdcEngine:
                     # retry may follow another writer's commit, so it
                     # re-guards
                     staged_wm if attempt else None,
+                    backfill_version,
                 )
             except Exception as e:  # noqa: BLE001 - policy-driven retry
                 attempt += 1
                 conflict_retriable = isinstance(e, CommitConflictError) and (
                     opts.retry_mode == "always"
-                    or (opts.retry_mode == "backfillOnly" and in_backfill)
+                    or (opts.retry_mode == "backfillOnly"
+                        and backfill_version is not None)
                 )
                 retriable = conflict_retriable or any(
                     s in str(e) for s in opts.retry_on_message_contents)
@@ -346,10 +360,13 @@ class CdcEngine:
         t0: float,
         batch_seq: int | None = None,
         staged_wm: int | None = None,
+        backfill_version: int | None = None,
     ) -> BatchResult:
         """``staged_wm`` non-None marks a retry: when the watermark
         advanced since staging, the stale-row guard re-applies against it
-        before re-planning.
+        before re-planning. ``backfill_version`` non-None marks a merge
+        backfill: no stale-row guard, never skipped as already applied,
+        and the commit records that version as the watermark.
 
         The whole plan (watermark, stale guard, anti-join read) is
         pinned to ONE base snapshot, and the commit validates against
@@ -360,7 +377,8 @@ class CdcEngine:
         base = self.table.current_snapshot()
         wm_rec = (base.watermark if base is not None else None) or {}
         wm = _watermark_version(wm_rec)
-        if staged_wm is not None and wm > staged_wm:
+        backfill = backfill_version is not None
+        if not backfill and staged_wm is not None and wm > staged_wm:
             # another writer advanced the table since this batch was
             # staged: rows now at or below the committed watermark are
             # already reflected and must not regress newer table rows —
@@ -369,9 +387,10 @@ class CdcEngine:
             deduped = deduped.filter(F.col(VERSION_COL) > F.lit(wm))
             bucket_stats = _bucket_stats(deduped)
         seq = batch_seq if batch_seq is not None else int(wm_rec.get("batch_seq", 0)) + 1
-        max_version = max((int(r["last_version"]) for r in bucket_stats), default=wm)
+        max_version = backfill_version if backfill else max(
+            (int(r["last_version"]) for r in bucket_stats), default=wm)
         rows_deduped = sum(int(r["rows"]) for r in bucket_stats)
-        if max_version <= wm:
+        if not backfill and max_version <= wm:
             # empty batch, or idempotence guard: already applied
             # (crash-replay window)
             return self._record(BatchResult(
@@ -379,25 +398,14 @@ class CdcEngine:
                 time.monotonic() - t0, skipped=True))
         touched = sorted(int(r[_BUCKET]) for r in bucket_stats)
 
-        # schema migration (K6): diff batch payload vs table schema
-        target_schema = self.table.schema()
-        diff = diff_schemas(target_schema, deduped.schema, system_columns=SYSTEM_COLS)
-        evolved = diff.evolved
-        target_cols = [f.name for f in evolved.fields]
-
+        # schema migration (K6): diff batch payload vs the base's schema
+        diff = diff_schemas(base.schema, deduped.schema, system_columns=SYSTEM_COLS)
         existing = self.table.read(buckets=touched, snapshot_id=base.snapshot_id)
         broadcast = rows_deduped <= self.opts.broadcast_threshold_rows
-        plan = plan_merge(existing, deduped, target_cols, broadcast_keys=broadcast)
-        # enforce exact evolved types (lit(None) columns are NullType);
-        # keep retained and upserts separate: retained rows come from
+        # retained and upserts stay separate: retained rows come from
         # this table's own per-bucket files, so their write skips the
         # bucket shuffle (an aligned part of plans/lake.py _write_parts)
-        def _cast(df: DataFrame) -> DataFrame:
-            return df.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in evolved.fields]
-            )
-        retained_cast = _cast(plan.retained)
-        upserts_cast = _cast(plan.upserts)
+        plan = plan_merge(existing, deduped, diff.evolved, broadcast_keys=broadcast)
 
         # per-partition lineage (FIXTURES.md §3): bucket = the stable
         # partition identity; latency measured up to commit start
@@ -418,9 +426,9 @@ class CdcEngine:
         # without another Exchange. Zero shuffles in the merge write.
         t_commit = time.monotonic()
         self.table.replace_buckets(
-            parts=[(retained_cast, True), (upserts_cast, True)],
+            parts=[(plan.retained, True), (plan.upserts, True)],
             buckets=touched,
-            schema=evolved if diff.changed else None,
+            schema=diff.evolved if diff.changed else None,
             watermark={
                 "version": max_version,
                 "batch_seq": seq,
@@ -550,25 +558,31 @@ class CdcEngine:
         backfill_id: str | None = None,
         shard_parts: list[DataFrame] | None = None,
     ) -> None:
-        """Full reload. ``overwrite`` replaces the table content
-        (backfillBehavior: Overwrite, CRD:116-118); ``merge`` upserts the
-        snapshot (Merge). The watermark is set to ``capture_version``
-        (the source version captured before the backfill started) so
-        change capture resumes without a gap — reference sequence
-        stream→backfill→stream, StreamRunner.scala:196-258.
+        """Full reload, one path for both behaviors (backfillBehavior,
+        CRD:116-118). Rows are shaped like a CDC batch (``_shape``);
+        rows without CDC columns are inserts at the committed version.
+        The watermark becomes ``capture_version`` (the source version
+        captured before the backfill started; None keeps the current
+        one), so change capture resumes without a gap — reference
+        sequence stream→backfill→stream, StreamRunner.scala:196-258.
 
-        ``shards > 1`` makes the overwrite RESTARTABLE (reference
-        ShardStagingProcessor + DefaultBackfillStateManager,
-        main.scala:94-101): the key space is split into ``shards``
-        disjoint bucket slices, each staged as its own write job whose
-        completion is persisted in the table's backfill state file. A
-        crashed reload re-invoked with the same snapshot and shard count
-        skips every completed shard — a 100 TB reload that dies at 99%
-        redoes one shard, not the world — and the final publish is still
-        ONE atomic commit, so readers never see a partial backfill.
-        ``backfill_id`` defaults to a deterministic id derived from
-        (capture_version, shards); pass an explicit id to disambiguate
-        retries with a different source snapshot.
+        ``merge`` is the CDC apply at that version (``apply_batch`` with
+        ``backfill_version``): no stale-row guard, never skipped as
+        already applied, keys absent from the snapshot stay, and
+        ``retry_mode="backfillOnly"`` retries it.
+
+        ``overwrite`` replaces the table content and is RESTARTABLE at
+        any shard count (reference ShardStagingProcessor +
+        DefaultBackfillStateManager, main.scala:94-101): the key space is
+        split into ``shards`` disjoint bucket slices, each staged as its
+        own write job whose completion is persisted in the table's
+        backfill state file. A crashed reload re-invoked with the same
+        snapshot and shard count skips every completed shard, and the
+        publish is ONE atomic commit of the evolved schema, so readers
+        never see a partial backfill. ``backfill_id`` defaults to an id
+        derived from (capture_version, shards); pass one to disambiguate
+        retries with a different source snapshot. Overwrite rows keep
+        their raw text; CDC and merge rows are text-normalized.
 
         ``shard_parts`` replaces the internal bucket-slice sharding with
         CALLER-provided shard DataFrames (one per shard, e.g.
@@ -577,74 +591,58 @@ class CdcEngine:
         but not pushable to a JDBC source, so each shard re-scans the
         whole source table server-side. Caller parts carry their own
         (range) predicates, which the source CAN seek — resuming a
-        crashed 100 TB reload then re-reads only unfinished slices.
-        Caller contract: parts are key-disjoint (every merge key's rows
-        in exactly one part) and together cover the snapshot;
-        ``snapshot`` is ignored when parts are given (pass any part).
-        Only ``overwrite`` behavior supports parts."""
+        crashed reload then re-reads only unfinished slices. Caller
+        contract: parts are key-disjoint (every merge key's rows in
+        exactly one part) and together cover the snapshot; ``snapshot``
+        is ignored when parts are given. Only ``overwrite`` takes parts."""
+        if behavior not in ("overwrite", "merge"):
+            raise ValueError(f"unknown backfill behavior: {behavior!r}")
+        if shard_parts is not None and behavior != "overwrite":
+            raise ValueError("shard_parts requires behavior='overwrite'")
+        wm_before = self.table.watermark() or {}
+        version = capture_version if capture_version is not None else int(wm_before.get("version", 0))
 
-        def _prep(sdf: DataFrame) -> DataFrame:
+        def _cdc_cols(sdf: DataFrame) -> DataFrame:
             sdf = normalize_column_names(sdf)
             if OPERATION_COL not in sdf.columns:
                 sdf = sdf.withColumn(OPERATION_COL, F.lit("I"))
             if VERSION_COL not in sdf.columns:
-                sdf = sdf.withColumn(VERSION_COL, F.lit(0).cast("long"))
+                sdf = sdf.withColumn(VERSION_COL, F.lit(version).cast("long"))
             return sdf
 
-        if shard_parts is not None and behavior != "overwrite":
-            raise ValueError("shard_parts requires behavior='overwrite'")
-        df = _prep(shard_parts[0] if shard_parts else snapshot)
         if behavior == "merge":
-            self.apply_batch(df, in_backfill=True)
-            return
-        if behavior != "overwrite":
-            raise ValueError(f"unknown backfill behavior: {behavior!r}")
-        wm_before = self.table.watermark() or {}
-        df = with_merge_key(df, list(self.opts.key_columns))
-        version = capture_version if capture_version is not None else int(wm_before.get("version", 0))
-        watermark = {"version": version,
-                     "batch_seq": int(wm_before.get("batch_seq", 0)) + 1,
-                     "partitions": []}
-        target_schema = self.table.schema()
-        diff = diff_schemas(target_schema, df.schema, system_columns=SYSTEM_COLS)
-
-        def _finalize(part: DataFrame) -> DataFrame:
-            part = latest_change_per_key(part)
-            part = part.filter(F.col(OPERATION_COL) != "D")
-            return part.select(
-                *[
-                    (F.col(f.name) if f.name in part.columns else F.lit(None))
-                    .cast(f.dataType).alias(f.name)
-                    for f in diff.evolved.fields
-                ]
-            )
-
-        write_opts = dict(max_rows_per_file=self.opts.max_rows_per_file,
-                          sort_within=list(self.opts.sort_within) or None)
-        if shard_parts is None and shards <= 1:
-            self.table.overwrite(_finalize(df), watermark=watermark, **write_opts)
+            self.apply_batch(_cdc_cols(snapshot), backfill_version=version)
             return
         if shard_parts is not None:
             # caller-sharded: source-pushable predicates make the resume
             # path re-read only unfinished slices (read_backfill_shards)
-            parts = [with_merge_key(_prep(raw), list(self.opts.key_columns))
-                     for raw in shard_parts]
+            parts = [self._shape(_cdc_cols(raw)) for raw in shard_parts]
         else:
             # shard i owns buckets ≡ i (mod shards) — bucket slices
             # partition the key space, so per-shard dedup is globally
             # correct and every staged file lands in a bucket the final
             # commit expects
+            df = self._shape(_cdc_cols(snapshot))
             bucket = bucket_expr(MERGE_KEY_COL, self.table.num_buckets)
-            parts = [df.filter(F.pmod(bucket, F.lit(shards)) == F.lit(shard))
-                     for shard in range(shards)]
+            n = max(shards, 1)
+            parts = [df.filter(F.pmod(bucket, F.lit(n)) == F.lit(shard))
+                     for shard in range(n)]
+        diff = diff_schemas(self.table.schema(), parts[0].schema,
+                            system_columns=SYSTEM_COLS)
         # deterministic resume identity: same capture version + shard
         # count = same backfill
         bid = backfill_id or f"v{version}x{len(parts)}"
         for shard, part in enumerate(parts):
+            part = latest_change_per_key(part).filter(F.col(OPERATION_COL) != "D")
             self.table.stage_backfill_shard(
-                _finalize(part), bid, shard, len(parts), **write_opts)
+                conform(part, diff.evolved), bid, shard, len(parts),
+                max_rows_per_file=self.opts.max_rows_per_file,
+                sort_within=list(self.opts.sort_within) or None)
         self.table.commit_backfill(
-            bid, watermark=watermark,
+            bid,
+            watermark={"version": version,
+                       "batch_seq": int(wm_before.get("batch_seq", 0)) + 1,
+                       "partitions": []},
             schema=diff.evolved if diff.changed else None,
         )
 

@@ -2,11 +2,12 @@
 bootstrap, replay in micro-batches, compare final state to a DuckDB
 oracle."""
 
+import os
 import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import types as T

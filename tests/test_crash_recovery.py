@@ -20,6 +20,7 @@ from arcane_stream_sqlserver_change_tracking_spark.streaming.runner import (
 
 from helpers import TRANSCRIPTS_SCHEMA, assert_tables_equal, oracle_final_state, sorted_pdf
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PAYLOAD_COLS = ["conv_id", "turn_idx", "role", "text", "ts"]
 OUT_COLS = PAYLOAD_COLS + ["sys_change_version"]
 
@@ -330,7 +331,7 @@ def test_sigkill_mid_replay_resumes_via_spec_cli(spark, tmp_path):
         except OSError:
             return None
 
-    proc = subprocess.Popen(cmd, cwd="/root/repo", env=env,
+    proc = subprocess.Popen(cmd, cwd=REPO_ROOT, env=env,
                             stdout=subprocess.DEVNULL,
                             stderr=subprocess.DEVNULL)
     try:
@@ -362,7 +363,7 @@ def test_sigkill_mid_replay_resumes_via_spec_cli(spark, tmp_path):
 
     # resume: the IDENTICAL command line (reference restart semantics -
     # same CRD spec, same env; --bootstrap no-ops on an existing table)
-    rc = subprocess.run(cmd, cwd="/root/repo", env=env,
+    rc = subprocess.run(cmd, cwd=REPO_ROOT, env=env,
                         stdout=subprocess.DEVNULL).returncode
     assert rc == 0
 
@@ -466,31 +467,50 @@ def _version_advances(table, version):
 
 
 @pytest.mark.parametrize("point", CRASH_POINTS)
-@pytest.mark.parametrize("scenario", ["cdc_batch", "sharded_backfill"])
+@pytest.mark.parametrize("scenario", ["cdc_batch", "sharded_backfill",
+                                      "one_shard_backfill", "merge_backfill"])
 def test_crash_point_matrix(spark, lake_root, monkeypatch, scenario, point):
     """A crash at every sub-step of the commit path: readers see the old
     or the new snapshot, never a torn one; a restart converges to the
     oracle with the watermark advanced once; the orphan sweep leaves no
     unreferenced data file."""
+    import pandas as pd
+    from pyspark.sql import Window
+
     eng = _engine(spark, lake_root)
     table = eng.table
     cdc_log = synth_transcripts_changelog(spark, 2000, num_convs=20, seed=11)
     eng.run_incremental(cdc_log.filter(F.col("sys_change_version") <= 1000))
     old_state = sorted_pdf(eng.current_state(), OUT_COLS)
     old_version = table.watermark()["version"]
+    log = synth_transcripts_changelog(spark, 1500, num_convs=20, seed=12)
+    new_version = 3000
     if scenario == "cdc_batch":
-        log = cdc_log
-        new_version = 2000
+        log, new_version = cdc_log, 2000
 
         def run(engine):
             engine.run_incremental(log)
-    else:
-        log = synth_transcripts_changelog(spark, 1500, num_convs=20, seed=12)
-        new_version = 3000
+    elif scenario == "merge_backfill":
+        # a snapshot: each key's latest live row, no CDC operation column
+        latest = Window.partitionBy("conv_id", "turn_idx").orderBy(
+            F.col("sys_change_version").desc())
+        snapshot = (log.withColumn("rn", F.row_number().over(latest))
+                    .filter("rn = 1 AND sys_change_operation <> 'D'")
+                    .drop("rn", "sys_change_operation"))
 
         def run(engine):
-            engine.backfill(log, capture_version=new_version, shards=2)
+            engine.backfill(snapshot, behavior="merge", capture_version=new_version)
+    else:
+        shards = 2 if scenario == "sharded_backfill" else 1
+
+        def run(engine):
+            engine.backfill(log, capture_version=new_version, shards=shards)
     want = oracle_final_state(log.toPandas(), PAYLOAD_COLS)
+    if scenario == "merge_backfill":
+        # the pre-crash state with the snapshot (``want`` so far) upserted
+        want = (pd.concat([old_state, want])
+                .drop_duplicates(["conv_id", "turn_idx"], keep="last")
+                .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
 
     _arm_crash(monkeypatch, point)
     with pytest.raises(SimulatedCrash):

@@ -66,7 +66,7 @@ def test_atomic_commit_and_time_travel(spark, lake_root):
     t.create(SCHEMA, num_buckets=4)
     t.append(_df(spark, 10))
     s1 = t.current_snapshot().snapshot_id
-    t.overwrite(_df(spark, 20, tag=1000))
+    t.replace_buckets(_df(spark, 20, tag=1000), list(t.current_snapshot().bucket_manifests))
     assert t.read().count() == 20
     # old snapshot still readable (time travel) until expiry
     assert t.read(snapshot_id=s1).count() == 10
@@ -125,7 +125,7 @@ def test_expire_snapshots_and_orphans(spark, lake_root):
     t = LakeTable(spark, lake_root)
     t.create(SCHEMA, num_buckets=4)
     for i in range(4):
-        t.overwrite(_df(spark, 50, tag=i))
+        t.replace_buckets(_df(spark, 50, tag=i), list(t.current_snapshot().bucket_manifests))
     assert len(t.snapshot_log()) == 5
     deleted = t.expire_snapshots(keep_last=2)
     assert deleted  # old overwritten files physically removed

@@ -384,3 +384,86 @@ def test_prefetching_drain_equals_one_chunk_per_call(spark, lake_root, tmp_path)
     got = sorted_pdf(one.current_state(), OUT_COLS)
     assert_tables_equal(got, sorted_pdf(step.current_state(), OUT_COLS))
     assert_tables_equal(got, oracle_final_state(log.toPandas(), PAYLOAD_COLS))
+
+
+# ------------------------------------------------- T4: one backfill path
+
+SIMPLE_LOG = "sys_change_version long, sys_change_operation string, Id int, Name string"
+
+
+def _simple_engine(spark, lake_root, **opt_kwargs) -> CdcEngine:
+    eng = CdcEngine(spark, LakeTable(spark, lake_root),
+                    EngineOptions(key_columns=("Id",), num_buckets=4, **opt_kwargs))
+    eng.bootstrap(T.StructType([T.StructField("Id", T.IntegerType()),
+                                T.StructField("Name", T.StringType())]))
+    return eng
+
+
+def _names(eng) -> dict:
+    return {r["Id"]: r["Name"] for r in eng.current_state().collect()}
+
+
+@pytest.mark.parametrize("table_ids", [(1, 2, 3, 4, 5), (1, 2, 3, 4, 99)])
+def test_merge_backfill_lands_rows_below_the_watermark(spark, lake_root, table_ids):
+    """A merge backfill is the CDC apply at the backfill's version:
+    snapshot rows older than the table's watermark still land (no
+    stale-row guard, never skipped as already applied), keys absent from
+    the snapshot stay, and the watermark becomes ``capture_version``."""
+    eng = _simple_engine(spark, lake_root)
+    eng.run_incremental(spark.createDataFrame(
+        [(v, "I", i, f"t{i}") for v, i in enumerate(table_ids, start=3)], SIMPLE_LOG))
+    assert len(_names(eng)) == 5 and eng.current_watermark() == 7
+    snapshot = spark.createDataFrame(
+        [(5, "I", i, f"bf{i}") for i in range(1, 41)], SIMPLE_LOG)
+    eng.backfill(snapshot, behavior="merge", capture_version=20)
+    want = {i: f"t{i}" for i in table_ids}
+    want.update({i: f"bf{i}" for i in range(1, 41)})
+    assert _names(eng) == want
+    assert eng.current_watermark() == 20
+
+
+def test_merge_backfill_without_cdc_columns(spark, lake_root):
+    """Snapshot rows without CDC columns are inserts at the version the
+    backfill commits — into an epoch table too."""
+    eng = _simple_engine(spark, lake_root)
+    snapshot = spark.createDataFrame(
+        [(i, f"bf{i}") for i in range(1, 41)], "Id int, Name string")
+    eng.backfill(snapshot, behavior="merge", capture_version=9)
+    rows = eng.current_state().collect()
+    assert sorted(r["Id"] for r in rows) == list(range(1, 41))
+    assert {r["sys_change_version"] for r in rows} == {9}
+    assert eng.current_watermark() == 9
+
+
+def test_one_shard_backfill_records_new_column(spark, lake_root):
+    eng = _simple_engine(spark, lake_root)
+    snapshot = spark.createDataFrame(
+        [(i, f"n{i}", i * 10) for i in range(1, 6)], "Id int, Name string, Score int")
+    eng.backfill(snapshot, capture_version=3, shards=1)
+    assert "Score" in eng.table.schema().fieldNames()
+    got = {r["Id"]: r["Score"] for r in eng.current_state().collect()}
+    assert got == {i: i * 10 for i in range(1, 6)}
+    assert eng.current_watermark() == 3
+
+
+@pytest.mark.parametrize("shards", [1, 2])
+def test_overwrite_backfill_applies_field_filter(spark, lake_root, shards):
+    """An excluded column reaches neither the table schema nor any data
+    file, at any shard count."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from arcane_stream_sqlserver_change_tracking_spark.operators.fields import FieldFilter
+
+    eng = _simple_engine(
+        spark, lake_root, field_filter=FieldFilter(rule="exclude", fields=("secret",)))
+    snapshot = spark.createDataFrame(
+        [(i, f"n{i}", f"s{i}") for i in range(1, 21)], "Id int, Name string, secret string")
+    eng.backfill(snapshot, capture_version=3, shards=shards)
+    assert "secret" not in eng.table.schema().fieldNames()
+    files = eng.table.current_snapshot().files
+    assert files
+    for f in files:
+        assert "secret" not in pq.read_schema(os.path.join(eng.table.root, f["path"])).names
+    assert _names(eng) == {i: f"n{i}" for i in range(1, 21)}
