@@ -109,9 +109,9 @@ log AS (
 # ---------------------------------------------------------------------------
 
 def q_w1_net_change_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1: salted two-phase latest-change-per-key."""
+    """W1: latest-change-per-key (one map-side-combined agg)."""
     log = _events_changelog(spark, sf_dir)
-    out = latest_change_per_key(log, strategy="salted")
+    out = latest_change_per_key(log)
     return out.select(
         "user_id",
         F.col(VERSION_COL).alias("last_version"),
@@ -136,7 +136,7 @@ FROM ranked WHERE rn = 1
 def q_cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full replay final state: latest per key, deletes drop the row."""
     log = _events_changelog(spark, sf_dir)
-    latest = latest_change_per_key(log, strategy="salted")
+    latest = latest_change_per_key(log)
     return latest.filter(F.col(OPERATION_COL) != "D").select(
         "user_id",
         F.col(VERSION_COL).alias("last_version"),
@@ -162,12 +162,8 @@ def q_j2_merge_as_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot replay — proving merge composition."""
     log = _events_changelog(spark, sf_dir)
     base_log = log.filter(F.col(VERSION_COL) <= 5000)
-    base = latest_change_per_key(base_log, strategy="salted").filter(
-        F.col(OPERATION_COL) != "D"
-    )
-    changes = latest_change_per_key(
-        log.filter(F.col(VERSION_COL) > 5000), strategy="salted"
-    )
+    base = latest_change_per_key(base_log).filter(F.col(OPERATION_COL) != "D")
+    changes = latest_change_per_key(log.filter(F.col(VERSION_COL) > 5000))
     base = base.select(MERGE_KEY_COL, "user_id", VERSION_COL, "event_type", "value")
     plan = plan_merge(base, changes, base.schema)
     return plan.new_state.select(
@@ -700,7 +696,7 @@ def q_mssql_changetable_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = simulate_changetable_result(_t(spark, sf_dir, "events"))
     log = to_changelog(raw)
     log = with_merge_key(log, ["Id"])
-    latest = latest_change_per_key(log, strategy="agg")
+    latest = latest_change_per_key(log)
     return latest.filter(F.col(OPERATION_COL) != "D").select(
         "Id",
         F.col(VERSION_COL).alias("last_version"),

@@ -282,7 +282,7 @@ def cdf_increment_to_changes(
 ) -> DataFrame:
     """Adapt one CDF increment (``snapshot_diff`` output) into the raw
     change-event shape the engine family consumes (``Scd2Table``,
-    ``CdcEngine.apply_batch``): insert/update → operation ``U`` with the
+    ``CdcEngine.run_incremental``): insert/update → operation ``U`` with the
     post-image payload, delete → ``D`` with a null payload, every row
     stamped with the increment's ``version`` (callers typically pass the
     drained-to snapshot id — monotone, so interval columns stay

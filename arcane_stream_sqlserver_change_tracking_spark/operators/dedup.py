@@ -7,29 +7,18 @@ boundaries because the downstream (Trino) MERGE aborts on duplicate
 source keys (SURVEY.md §2.3; behavior pinned by
 src/test/scala/tests/integration/StreamRunner.scala:155-161,254-258).
 
-Two strategies (measured in BENCH.md on the same feeds):
-
-* ``strategy="agg"`` (engine default) — ONE shuffle:
-  ``groupBy(mk).agg(max_by(struct(all_cols), order))``. Skew-safe by
-  construction: hash aggregation's map-side partial agg collapses a hot
-  key to ≤1 row per map task *before* the shuffle, so the hot key's
-  reducer receives ≤ num_map_tasks rows regardless of how many changes
-  hit that key — the same bound salting buys, with one fewer shuffle.
-  Measured: 1.2s vs 6.9s (salted) vs 1.8s (window) on a 200k-row
-  unique-key feed; 0.5s vs 1.8s under extreme skew (local[32]). The
-  textbook window form,
-  ``row_number() OVER (PARTITION BY mk ORDER BY version DESC) = 1``,
-  is not offered: it cannot map-side combine (a hot key lands on one
-  task). ``top_k_per_key`` below is the window shape for k > 1.
-
-* ``strategy="salted"`` — explicit two-phase salted mitigation (the
-  BASELINE.json north_star technique, kept as an explicit operator and
-  for feeds where map-side combine is defeated, e.g. agg spill to
-  sort-based fallback with adversarial orderings):
-
-  1. ``groupBy(mk, salt)`` with ``max_by`` — the salt splits a hot key
-     over ``num_salts`` reducers;
-  2. ``groupBy(mk)`` over the ≤ num_salts survivors per key.
+One strategy, ONE shuffle:
+``groupBy(mk).agg(max_by(struct(all_cols), order))``. Skew-safe by
+construction: hash aggregation's map-side partial agg collapses a hot
+key to ≤1 row per map task *before* the shuffle, so the hot key's
+reducer receives ≤ num_map_tasks rows regardless of how many changes hit
+that key — the bound an explicit salted two-phase agg buys, with one
+fewer shuffle. The salted variant was deleted after losing on every
+measured feed (BENCH.md: 1M rows on local[4], 1.9s vs 1.1s with 50% of
+rows on one key, 2.7s vs 1.5s with unique keys). The textbook window
+form, ``row_number() OVER (PARTITION BY mk ORDER BY version DESC) = 1``,
+is not offered: it cannot map-side combine (a hot key lands on one
+task). ``top_k_per_key`` below is the window shape for k > 1.
 
 Determinism under version ties: ordered by
 ``struct(sys_change_version, sys_change_operation, xxhash64(row))`` so
@@ -47,8 +36,6 @@ from pyspark.sql import functions as F
 from ..functions.keys import MERGE_KEY_COL, OPERATION_COL, VERSION_COL
 
 _ROW = "__row"
-_SALT = "__salt"
-_ORD = "__ord"
 
 
 def _order_struct(df: DataFrame):
@@ -65,45 +52,20 @@ def _order_struct(df: DataFrame):
 def latest_change_per_key(
     df: DataFrame,
     key_col: str = MERGE_KEY_COL,
-    version_col: str = VERSION_COL,
-    strategy: str = "agg",
-    num_salts: int = 16,
     count_col: str | None = None,
 ) -> DataFrame:
-    """Return one row per ``key_col`` — the one with max ``version_col``.
-    With ``count_col``, each row also carries in that column the number
-    of input rows its key had; their sum is the dedup's input row count."""
+    """Return one row per ``key_col`` — the one with max
+    ``sys_change_version``. With ``count_col``, each row also carries in
+    that column the number of input rows its key had; their sum is the
+    dedup's input row count."""
     counted = [count_col] if count_col else []
-    if strategy == "agg":
-        cols = df.columns
-        ordered = _order_struct(df)
-        return (
-            df.groupBy(key_col)
-            .agg(F.max_by(F.struct(*cols), ordered).alias(_ROW),
-                 *[F.count(F.lit(1)).alias(c) for c in counted])
-            .select([F.col(f"{_ROW}.{c}").alias(c) for c in cols] + counted)
-        )
-
-    if strategy != "salted":
-        raise ValueError(f"unknown dedup strategy: {strategy!r}")
-
     cols = df.columns
-    ordered = _order_struct(df)
-    # salt from the version: deterministic, spreads a hot key's rows
-    # uniformly over num_salts reducers
-    salted = df.withColumn(_SALT, F.pmod(F.xxhash64(F.col(version_col)), F.lit(num_salts)))
-    phase1 = (
-        salted.groupBy(key_col, _SALT)
-        .agg(F.max_by(F.struct(*cols), ordered).alias(_ROW), F.max(ordered).alias(_ORD),
+    return (
+        df.groupBy(key_col)
+        .agg(F.max_by(F.struct(*cols), _order_struct(df)).alias(_ROW),
              *[F.count(F.lit(1)).alias(c) for c in counted])
-    )
-    phase2 = (
-        phase1.groupBy(key_col)
-        .agg(F.max_by(F.col(_ROW), F.col(_ORD)).alias(_ROW),
-             *[F.sum(c).alias(c) for c in counted])
         .select([F.col(f"{_ROW}.{c}").alias(c) for c in cols] + counted)
     )
-    return phase2
 
 
 def top_k_per_key(

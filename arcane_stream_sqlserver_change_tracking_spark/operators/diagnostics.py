@@ -1,9 +1,10 @@
 """Data-distribution diagnostics for shuffle planning.
 
-Every shuffle-keyed operator in this engine (W1 dedup's salted
-strategy, the centroid-bucketed joins, the merge path) has a skew
-mitigation whose USE is a judgment call — ``num_salts``, centroid
-count, bucket layout. This module computes the evidence for that call:
+Shuffle-keyed operators without a map-side combine (the
+centroid-bucketed joins, the merge path, a caller's own joins) need a
+skew call — centroid count, bucket layout, salting or broadcast. W1
+dedup needs none: its aggregation combines a hot key map-side. This
+module computes the evidence for that call:
 
 * :func:`skew_report` — the top-N hottest keys with exact row counts
   and integer ppm shares, plus nothing else: ONE map-side-combined

@@ -15,8 +15,8 @@ Two providers:
   so 10^10 events are *described*, never materialized: generation cost
   is per-partition streaming work, zero driver memory, no shuffles.
   Skew is built in: a configurable share of events hit a few hot
-  conversations (Zipf-ish head), which is what the salted dedup path
-  exists for.
+  conversations (Zipf-ish head), which the dedup's map-side combine
+  absorbs.
 
 * :func:`events_as_changelog` — adapts the driver-provided ``events``
   parquet table (TESTDATA.md) to the changelog shape: key=user_id,

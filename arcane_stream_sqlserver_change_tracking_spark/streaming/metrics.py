@@ -30,7 +30,8 @@ Metric names are stable contract::
     cdc.batch.prepare_ms         timer    dedup/normalize + stats job
     cdc.batch.commit_ms          timer    merge write + atomic commit
     cdc.batch.apply_ms           timer    end-to-end batch latency
-    cdc.batch.skipped            counter  idempotence-guard no-ops
+    cdc.batch.skipped            counter  a retry found its batch already
+                                          committed (nothing to apply)
 
 Every datagram carries the configured global tags (metricTags parity)
 plus ``batch_seq``.

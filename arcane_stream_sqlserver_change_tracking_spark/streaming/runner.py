@@ -13,13 +13,17 @@ Mirrors the reference graph (main.scala:69-117; SURVEY.md §3.1):
     -> watermark + per-partition lineage COMMIT   -> plans/lake.py (atomic)
     -> maintenance every N batches                -> plans/lake.py
 
-One drain loop (``run_incremental``) stages each chunk on a helper
-thread, the next chunk while the current one commits; one retry loop
+One CDC entry point, the drain loop (``run_incremental``): replay, poll
+ticks and Structured-Streaming micro-batches all go through it. It drops
+rows at or below the watermark once, chunks the rest, stages each chunk
+on a helper thread (the next chunk while the current one commits) and
+runs the maintenance and ANALYZE cadences; one retry loop
 (``_apply_staged``) re-plans a failed plan+commit under the K3 policy.
 One backfill path (``backfill``, T4): ``overwrite`` stages every
 bucket-slice shard (one when ``shards=1``) and publishes them in one
-commit, restartable at any shard count; ``merge`` is the CDC apply
-committed at the backfill's version.
+commit, restartable at any shard count; ``merge`` stages the snapshot
+like one chunk and commits it through the same retry loop at the
+backfill's version.
 
 Exactly-once: the watermark is a property of the same atomic snapshot
 commit that publishes the merged files, so a crash at any point leaves
@@ -230,35 +234,27 @@ class CdcEngine:
         df = self.opts.field_filter.apply(normalize_column_names(batch))
         return with_merge_key(df, list(self.opts.key_columns))
 
-    def _prepare(self, batch: DataFrame, watermark_version: "int | None" = 0,
-                 count_rows_in: bool = False) -> DataFrame:
-        """shape (``_shape``) -> stale-row guard -> salted dedup -> text
-        normalize -> bucket id. All lazily declared; one cached result
-        per batch. ``count_rows_in`` keeps the dedup's per-key input row
-        count as a system column, so the stats job sums the rows
-        entering dedup (no job of its own).
+    def _prepare(self, batch: DataFrame) -> DataFrame:
+        """shape (``_shape``) -> agg dedup -> text normalize -> bucket
+        id. All lazily declared; one cached result per batch. The dedup
+        keeps each key's input row count as a system column, so the
+        stats job sums the rows entering dedup (no job of its own).
+        No stale-row guard here: the drain's ``incremental_read`` drops
+        rows at or below the watermark once, and a merge backfill lands
+        rows below it on purpose.
 
         Text normalization runs AFTER dedup on purpose: it is per-row
         deterministic, so normalizing only the surviving row per key is
         semantically identical and the Arrow batches (and the dedup
         shuffles before them) carry ~dup-factor× fewer rows."""
-        df = self._shape(batch)
-        if watermark_version is not None:
-            # stale-row guard (None for a merge backfill): rows at or
-            # below the committed watermark are already in the table, so
-            # a redelivered batch with PARTIAL overlap (shifted boundaries
-            # after a crash) must not let an old version regress a newer
-            # table row — batch-level skip alone can't catch that
-            df = df.filter(F.col(VERSION_COL) > F.lit(watermark_version))
-        df = latest_change_per_key(
-            df, count_col=_ROWS_IN if count_rows_in else None)
+        df = latest_change_per_key(self._shape(batch), count_col=_ROWS_IN)
         norm = normalize_text if self.opts.normalize_impl == "pandas" else normalize_text_expr
         for c in self.opts.normalize_text_columns:
             if c in df.columns:
                 df = df.withColumn(c, norm(F.col(c)))
         return df.withColumn(_BUCKET, bucket_expr(MERGE_KEY_COL, self.table.num_buckets))
 
-    def _stage(self, batch: DataFrame, watermark_version: "int | None"):
+    def _stage(self, batch: DataFrame):
         """Prepare a batch (dedup/normalize/bucket), cache it, and run
         the ONE stats job (touched buckets, per-bucket lineage, max
         version). Independent of table mutations, so the next batch can
@@ -267,8 +263,7 @@ class CdcEngine:
         (measured ~20% faster than recompute-with-shuffle-reuse).
         Returns ``(deduped, bucket_stats, rows_in)``; ``rows_in`` (rows
         entering dedup) is summed by the stats job."""
-        deduped = self._prepare(batch, watermark_version=watermark_version,
-                                count_rows_in=True).persist()
+        deduped = self._prepare(batch).persist()
         try:
             if self.opts.expectations:
                 from ..operators.quality_gate import enforce_expectations
@@ -285,34 +280,13 @@ class CdcEngine:
             raise
         return deduped, bucket_stats, sum(int(r["rows_in"]) for r in bucket_stats)
 
-    def apply_batch(
-        self,
-        batch: DataFrame,
-        batch_seq: int | None = None,
-        backfill_version: int | None = None,
-    ) -> BatchResult:
-        """Apply one micro-batch (the foreachBatch body).
-        ``backfill_version`` makes it a merge backfill committed at that
-        version (``_apply_staged_once``)."""
-        t0 = time.monotonic()
-        wm = self.current_watermark()
-        deduped, bucket_stats, rows_in = self._stage(
-            batch, wm if backfill_version is None else None)
-        try:
-            return self._apply_staged(deduped, bucket_stats, rows_in, t0,
-                                      batch_seq, staged_wm=wm,
-                                      backfill_version=backfill_version)
-        finally:
-            deduped.unpersist()
-
     def _apply_staged(
         self,
         deduped: DataFrame,
         bucket_stats,
         rows_in: int,
         t0: float,
-        batch_seq: int | None = None,
-        staged_wm: int | None = None,
+        chunk_lo: int | None = None,
         backfill_version: int | None = None,
     ) -> BatchResult:
         """Apply a staged batch under the K3 retry policy (CRD:181-211):
@@ -330,14 +304,8 @@ class CdcEngine:
         while True:
             try:
                 return self._apply_staged_once(
-                    deduped, bucket_stats, rows_in, t0, batch_seq,
-                    # first attempt trusts the staging-time stale-row
-                    # guard (chunks are disjoint ascending ranges); a
-                    # retry may follow another writer's commit, so it
-                    # re-guards
-                    staged_wm if attempt else None,
-                    backfill_version,
-                )
+                    deduped, bucket_stats, rows_in, t0, chunk_lo,
+                    backfill_version)
             except Exception as e:  # noqa: BLE001 - policy-driven retry
                 attempt += 1
                 conflict_retriable = isinstance(e, CommitConflictError) and (
@@ -358,15 +326,18 @@ class CdcEngine:
         bucket_stats,
         rows_in: int,
         t0: float,
-        batch_seq: int | None = None,
-        staged_wm: int | None = None,
+        chunk_lo: int | None = None,
         backfill_version: int | None = None,
     ) -> BatchResult:
-        """``staged_wm`` non-None marks a retry: when the watermark
-        advanced since staging, the stale-row guard re-applies against it
-        before re-planning. ``backfill_version`` non-None marks a merge
-        backfill: no stale-row guard, never skipped as already applied,
-        and the commit records that version as the watermark.
+        """``chunk_lo`` is the staged chunk's exclusive lower version
+        bound (None for a merge backfill). When the committed watermark
+        is above it, another writer committed since staging, and the
+        stale-row guard re-applies against the watermark before
+        re-planning. A single-writer drain never re-guards: chunk i
+        commits at most its upper bound, which is chunk i+1's
+        ``chunk_lo``. ``backfill_version`` non-None marks a merge
+        backfill: never skipped as already applied, and the commit
+        records that version as the watermark.
 
         The whole plan (watermark, stale guard, anti-join read) is
         pinned to ONE base snapshot, and the commit validates against
@@ -378,7 +349,7 @@ class CdcEngine:
         wm_rec = (base.watermark if base is not None else None) or {}
         wm = _watermark_version(wm_rec)
         backfill = backfill_version is not None
-        if not backfill and staged_wm is not None and wm > staged_wm:
+        if chunk_lo is not None and wm > chunk_lo:
             # another writer advanced the table since this batch was
             # staged: rows now at or below the committed watermark are
             # already reflected and must not regress newer table rows —
@@ -386,7 +357,7 @@ class CdcEngine:
             # (a cache-hit aggregation, not a recompute of the dedup)
             deduped = deduped.filter(F.col(VERSION_COL) > F.lit(wm))
             bucket_stats = _bucket_stats(deduped)
-        seq = batch_seq if batch_seq is not None else int(wm_rec.get("batch_seq", 0)) + 1
+        seq = int(wm_rec.get("batch_seq", 0)) + 1
         max_version = backfill_version if backfill else max(
             (int(r["last_version"]) for r in bucket_stats), default=wm)
         rows_deduped = sum(int(r["rows"]) for r in bucket_stats)
@@ -458,22 +429,28 @@ class CdcEngine:
         maintenance: bool = True,
     ) -> list[BatchResult]:
         """Drain all pending changes (version > watermark) in
-        count-balanced micro-batches. This is the batch-replay twin of
-        the polling loop; call it per poll tick for continuous mode.
+        count-balanced micro-batches: the one entry point for every CDC
+        batch — replay, each poll tick (``poll_loop``) and each
+        Structured-Streaming micro-batch (``run_stream``). A re-delivered
+        changelog has nothing above the watermark, so it applies nothing
+        and records no batch.
 
-        Every chunk stages (dedup shuffle + cache + stats job — pure
-        reads, independent of table state) on a helper thread, and chunk
-        i+1 stages while chunk i's merge-write commits. Correct because
-        chunks are disjoint ascending version ranges: every row of chunk
-        i+1 is above any watermark chunk i can commit, so staging early
-        with the pre-loop watermark filters identically. Commits stay
-        strictly serial — the watermark sequence is untouched."""
+        The stale-row guard runs once, in ``incremental_read``. Every
+        chunk stages (dedup shuffle + cache + stats job — pure reads,
+        independent of table state) on a helper thread, and chunk i+1
+        stages while chunk i's merge-write commits. Correct because
+        chunks are disjoint ascending version ranges ``(lo, hi]``: chunk
+        i commits at most its ``hi``, chunk i+1's ``lo``, so no row of
+        chunk i+1 is ever at or below a watermark this drain commits.
+        Commits stay strictly serial — the watermark sequence is
+        untouched. Maintenance (K7) and ANALYZE run on their batch
+        cadences after each commit."""
         from concurrent.futures import ThreadPoolExecutor
 
         from .shaper import build_shaper
 
-        wm = self.current_watermark()
-        pending = incremental_read(normalize_column_names(changelog), wm)
+        pending = incremental_read(normalize_column_names(changelog),
+                                   self.current_watermark())
         # T2 throughput shaper: static returns the advised baseline;
         # memoryBound scales it by schema-estimated row size vs free
         # memory, with the spec's memoryBound body as tuning (CRD
@@ -513,7 +490,7 @@ class CdcEngine:
 
         with ThreadPoolExecutor(max_workers=1) as ex:
             def stage(i: int):
-                return ex.submit(self._stage, chunk_filter(pending, *chunks[i]), wm)
+                return ex.submit(self._stage, chunk_filter(pending, *chunks[i]))
 
             t_batch = time.monotonic()
             staged = stage(0)
@@ -530,7 +507,7 @@ class CdcEngine:
                     staged = stage(i + 1) if i + 1 < len(chunks) else None
                     try:
                         res = self._apply_staged(deduped, stats, rows_in,
-                                                 t_batch, staged_wm=wm)
+                                                 t_batch, chunks[i][0])
                     finally:
                         deduped.unpersist()
                     results.append(res)
@@ -566,10 +543,11 @@ class CdcEngine:
         one), so change capture resumes without a gap — reference
         sequence stream→backfill→stream, StreamRunner.scala:196-258.
 
-        ``merge`` is the CDC apply at that version (``apply_batch`` with
-        ``backfill_version``): no stale-row guard, never skipped as
-        already applied, keys absent from the snapshot stay, and
-        ``retry_mode="backfillOnly"`` retries it.
+        ``merge`` stages the whole snapshot like one CDC chunk (``_stage``)
+        and commits it through the CDC retry loop with
+        ``backfill_version``: no watermark read, so rows at or below the
+        watermark land too; never skipped as already applied; keys absent
+        from the snapshot stay; ``retry_mode="backfillOnly"`` retries it.
 
         ``overwrite`` replaces the table content and is RESTARTABLE at
         any shard count (reference ShardStagingProcessor +
@@ -611,7 +589,13 @@ class CdcEngine:
             return sdf
 
         if behavior == "merge":
-            self.apply_batch(_cdc_cols(snapshot), backfill_version=version)
+            t0 = time.monotonic()
+            deduped, stats, rows_in = self._stage(_cdc_cols(snapshot))
+            try:
+                self._apply_staged(deduped, stats, rows_in, t0,
+                                   backfill_version=version)
+            finally:
+                deduped.unpersist()
             return
         if shard_parts is not None:
             # caller-sharded: source-pushable predicates make the resume

@@ -11,16 +11,19 @@ Spark-first mapping:
   ``changeCaptureJitterSeed``, crd yaml:132-135) for the tick-driven
   mode — jitter de-synchronizes many streams sharing one SQL Server
 * one polled batch                    -> one micro-batch in
-  ``foreachBatch`` (the natural rowsPerGroup boundary, A1)
+  ``foreachBatch``, drained by ``CdcEngine.run_incremental`` like a
+  poll tick (the same chunking, staging overlap and K7 maintenance /
+  ANALYZE cadences)
 * throughput shaper (T2)              -> ``maxFilesPerTrigger`` /
-  source rate options on the stream reader
+  source rate options on the stream reader bound the micro-batch;
+  the engine's shaper (``max_events_per_batch``) then chunks it
 * graceful shutdown (T3)              -> ``query.stop()`` /
   ``trigger(availableNow=True)`` bounded drain for tests
-* exactly-once                        -> ``apply_batch``'s
-  watermark-gated idempotence: Structured Streaming may REPLAY a
-  micro-batch after crash/restart (foreachBatch is at-least-once); the
-  engine skips any batch whose max version <= committed watermark, so
-  the lake table state is exactly-once regardless — the standard
+* exactly-once                        -> the drain's watermark read:
+  Structured Streaming may REPLAY a micro-batch after crash/restart
+  (foreachBatch is at-least-once); only rows above the committed
+  watermark are applied, so a replayed batch applies nothing and the
+  lake table state is exactly-once regardless — the standard
   idempotent-sink pattern, strengthened because our watermark lives in
   the same atomic snapshot commit as the data.
 
@@ -112,9 +115,10 @@ def run_stream(
     available_now: bool = False,
     query_name: str = "arcane-cdc-stream",
 ) -> StreamingQuery:
-    """Start the continuous pipeline: every micro-batch runs the full
-    per-batch apply (dedup -> normalize -> schema-evolve -> merge ->
-    atomic watermark commit).
+    """Start the continuous pipeline: every micro-batch is drained by
+    ``engine.run_incremental`` (watermark read -> chunking -> dedup ->
+    normalize -> schema-evolve -> merge -> atomic watermark commit ->
+    maintenance cadence).
 
     ``available_now=True`` drains all currently-available input then
     stops (the reference test-mode ``TimeLimitLifetimeService`` analog);
@@ -123,9 +127,9 @@ def run_stream(
     """
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch may re-deliver a batch after restart; apply_batch
-        # is idempotent (version <= watermark => skipped)
-        engine.apply_batch(batch_df, batch_seq=None)
+        # foreachBatch may re-deliver a batch after restart; the drain
+        # applies only rows above the committed watermark
+        engine.run_incremental(batch_df)
 
     writer = (
         changelog_stream.writeStream.foreachBatch(_apply)

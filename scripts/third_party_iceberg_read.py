@@ -118,16 +118,16 @@ def build_fixture(spark, root: str):
            "conv_id string, turn_idx int, text string"
     b1 = spark.createDataFrame(
         [(i, "I", f"c{i % 7}", i % 5, f"t{i}") for i in range(1, 41)], base)
-    eng.apply_batch(b1)
+    eng.run_incremental(b1)
     evolved = base + ", tool string"
     b2 = spark.createDataFrame(
         [(i, "U", f"c{i % 7}", i % 5, f"u{i}", f"tool{i % 3}")
          for i in range(41, 81)], evolved)
-    eng.apply_batch(b2)
+    eng.run_incremental(b2)
     b3 = spark.createDataFrame(
         [(i, "D" if i % 4 == 0 else "U", f"c{i % 7}", i % 5, f"v{i}", None)
          for i in range(81, 121)], evolved)
-    eng.apply_batch(b3)
+    eng.run_incremental(b3)
     return table, list(table.snapshot_log())
 
 

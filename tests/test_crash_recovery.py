@@ -45,8 +45,8 @@ def test_crash_between_write_and_commit(spark, lake_root):
     # simulate a crash DURING batch 2: data files land in data/ but the
     # manifest pointer is never swung
     batch2 = eng._prepare(
-        log.filter(F.col("sys_change_version") > 2000), watermark_version=2000
-    ).drop("__b")
+        log.filter(F.col("sys_change_version") > 2000)
+    ).drop("__b", "__n")
     orphan_entries = table._write_parts([(batch2, False)], snapshot_id=999)
     assert orphan_entries and len(os.listdir(table.data_dir)) > n_files_before
 
@@ -200,11 +200,11 @@ def test_racing_writers_replan_and_converge(spark, lake_root, monkeypatch):
     def racing_rb(self, *a, **kw):
         if self is eng_b.table and not fired["x"]:
             fired["x"] = True
-            eng_a.apply_batch(b1)
+            eng_a.run_incremental(b1)
         return real_rb(self, *a, **kw)
 
     monkeypatch.setattr(LakeTable, "replace_buckets", racing_rb)
-    res = eng_b.apply_batch(b2)
+    [res] = eng_b.run_incremental(b2)
     assert not res.skipped and res.max_version == 4000
 
     # both batches landed; final state equals sequential application
@@ -222,12 +222,12 @@ def test_racing_writers_replan_and_converge(spark, lake_root, monkeypatch):
     def racing_rb2(self, *a, **kw):
         if self is eng_d.table and not fired["x"]:
             fired["x"] = True
-            eng_c.apply_batch(b1)
+            eng_c.run_incremental(b1)
         return real_rb(self, *a, **kw)
 
     monkeypatch.setattr(LakeTable, "replace_buckets", racing_rb2)
     with pytest.raises(CommitConflictError):
-        eng_d.apply_batch(b2)
+        eng_d.run_incremental(b2)
 
 
 def test_caller_sharded_backfill_parts(spark, lake_root, monkeypatch):

@@ -1,4 +1,4 @@
-"""W1 — net-change dedup: agg vs salted two-phase, including hot-key
+"""W1 — net-change dedup (one map-side-combined agg), including hot-key
 skew and intra-batch multi-change keys (reference contract: MERGE source
 must have at most one row per key, SURVEY.md §2.3)."""
 
@@ -29,20 +29,18 @@ ROWS = [
 ]
 
 
-@pytest.mark.parametrize("strategy", ["agg", "salted"])
-def test_latest_per_key(spark, strategy):
+def test_latest_per_key(spark):
     df = _changelog(spark, ROWS)
     # count_col: how many input rows each key had
     got = {
         r[MERGE_KEY_COL]: (r[VERSION_COL], r[OPERATION_COL], r["payload"], r["n"])
-        for r in latest_change_per_key(df, strategy=strategy, count_col="n").collect()
+        for r in latest_change_per_key(df, count_col="n").collect()
     }
     assert got == {"k1": (5, "U", "b", 3), "k2": (2, "I", "d", 1), "k3": (6, "D", None, 2)}
 
 
-@pytest.mark.parametrize("strategy", ["agg", "salted"])
-def test_hot_key_skew(spark, strategy):
-    # one key holds 90% of a 50k-row batch — the salted path splits it
+def test_hot_key_skew(spark):
+    # one key holds 90% of a 50k-row batch — map-side combine absorbs it
     n = 50_000
     df = (
         spark.range(n)
@@ -55,24 +53,12 @@ def test_hot_key_skew(spark, strategy):
             F.col("id").cast("string").alias("payload"),
         )
     )
-    out = latest_change_per_key(df, strategy=strategy)
+    out = latest_change_per_key(df)
     rows = {r[MERGE_KEY_COL]: r[VERSION_COL] for r in out.collect()}
     # max hot id is 49998 (49999 % 10 == 9 is non-hot) -> version 49999
     assert rows["hot"] == n - 1
     # exactly one row per key
     assert out.groupBy(MERGE_KEY_COL).count().filter("count > 1").count() == 0
-
-
-def test_strategies_agree(spark):
-    df = _changelog(spark, ROWS)
-    b = sorted(map(tuple, latest_change_per_key(df, strategy="salted").collect()))
-    c = sorted(map(tuple, latest_change_per_key(df, strategy="agg").collect()))
-    assert b == c
-
-
-def test_unknown_strategy(spark):
-    with pytest.raises(ValueError):
-        latest_change_per_key(_changelog(spark, ROWS), strategy="nope")
 
 
 # ---------------------------------------------------------------------------

@@ -209,9 +209,9 @@ def test_reference_minimal_fixture_parity(spark, lake_root):
 def test_partial_overlap_redelivery_cannot_regress(spark, lake_root):
     """A redelivered batch whose version range PARTIALLY overlaps the
     committed watermark (shifted boundaries after a crash) must not let
-    a stale change overwrite a newer table row — the per-row stale
-    guard (version > watermark) inside apply_batch, not just the
-    batch-level skip."""
+    a stale change overwrite a newer table row — the drain's per-row
+    stale guard (version > watermark in ``incremental_read``), not just
+    a batch-level skip."""
     eng = make_engine(spark, lake_root, max_events_per_batch=10**9)
     log = synth_transcripts_changelog(spark, 1000, num_convs=30, seed=11)
     eng.run_incremental(log)
@@ -225,7 +225,7 @@ def test_partial_overlap_redelivery_cannot_regress(spark, lake_root):
     stale = log.filter(F.col("sys_change_version") <= 800)
     fresh = synth_transcripts_changelog(spark, 100, num_convs=30, seed=11,
                                         version_offset=1000)
-    res = eng.apply_batch(stale.unionByName(fresh))
+    [res] = eng.run_incremental(stale.unionByName(fresh))
     assert not res.skipped and res.max_version == 1100
 
     # oracle: original 1000 + the 100 fresh events — the stale rows are

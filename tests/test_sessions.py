@@ -26,6 +26,12 @@ def _write_chunk(spark, path, rows):
     pdf["ts"] = pd.to_datetime(pdf["ts"])
     pdf["event_type"] = "x"
     pq.write_table(pa.Table.from_pandas(pdf), path, coerce_timestamps="us")
+    # the file stream source orders files by modification time: chunks
+    # written within one millisecond would be read in directory-listing
+    # order, so each chunk lands a second after the newest file there
+    land = os.path.dirname(path)
+    mtime = max(os.path.getmtime(os.path.join(land, f)) for f in os.listdir(land)) + 1
+    os.utime(path, (mtime, mtime))
 
 
 def test_sessionize_batch_gap_semantics(spark):

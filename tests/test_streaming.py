@@ -89,8 +89,8 @@ def test_stream_drain_restart_exactly_once(spark, tmp_path):
     assert_tables_equal(got2, want2)
 
     # phase 3: fresh checkpoint replays ALL files (at-least-once
-    # delivery) — the engine's watermark gate must skip every batch,
-    # leaving state untouched: exactly-once end to end
+    # delivery) — nothing is above the engine's watermark, so no batch
+    # applies and state stays untouched: exactly-once end to end
     snap_before = eng.table.current_snapshot().snapshot_id
     n_batches_before = len(eng.metrics)
     q3 = run_stream(
@@ -101,10 +101,40 @@ def test_stream_drain_restart_exactly_once(spark, tmp_path):
     )
     q3.awaitTermination(120)
     replayed = eng.metrics[n_batches_before:]
-    assert all(r.skipped for r in replayed)
+    assert replayed == []
     assert eng.table.current_snapshot().snapshot_id == snap_before
     got3 = sorted_pdf(eng.current_state(), OUT_COLS)
     assert_tables_equal(got3, want2)
+
+
+def test_stream_runs_maintenance_and_chunks(spark, tmp_path):
+    """A Structured-Streaming micro-batch drains like a poll: the T2
+    shaper splits each 2,000-row micro-batch into 1,000-event batches,
+    and the K7 maintenance cadence runs every second applied batch."""
+    land_dir = str(tmp_path / "landing")
+    eng = CdcEngine(
+        spark,
+        LakeTable(spark, str(tmp_path / "t")),
+        EngineOptions(num_buckets=8, max_events_per_batch=1000,
+                      maintenance_interval_batches=2),
+    )
+    eng.bootstrap(TRANSCRIPTS_SCHEMA)
+    full = _land_chunks(spark, land_dir, total=4000, chunk=2000, seed=5)
+    q = run_stream(
+        eng,
+        changelog_file_stream(spark, land_dir, full.schema, max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    assert not q.isActive
+    assert len(eng.metrics) == 4
+    assert eng.table.watermark()["version"] == 4000
+    lineages = [eng.table.snapshot(i).lineage for i in eng.table.snapshot_log()]
+    assert any(entry.get("maintenance") == "rewrite_data_files"
+               for lin in lineages for entry in lin)
+    got = sorted_pdf(eng.current_state(), OUT_COLS)
+    assert_tables_equal(got, oracle_final_state(full.toPandas(), PAYLOAD_COLS))
 
 
 def test_stream_schema_evolution_across_restart(spark, tmp_path):
