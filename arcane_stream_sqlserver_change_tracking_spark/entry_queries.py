@@ -165,8 +165,7 @@ def q_j2_merge_as_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = latest_change_per_key(base_log).filter(F.col(OPERATION_COL) != "D")
     changes = latest_change_per_key(log.filter(F.col(VERSION_COL) > 5000))
     base = base.select(MERGE_KEY_COL, "user_id", VERSION_COL, "event_type", "value")
-    plan = plan_merge(base, changes, base.schema)
-    return plan.new_state.select(
+    return plan_merge(base, changes, base.schema).select(
         "user_id", F.col(VERSION_COL).alias("last_version"), "event_type", "value"
     )
 
@@ -652,8 +651,8 @@ FROM w WHERE op <> 'D'
 def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintained SCD2 lake table (operators/scd2_table.Scd2Table): the
     changelog applied in THREE micro-batches as copy-on-write bucket
-    replacements (retained keys pass through aligned, touched keys'
-    intervals recomputed from a small window), then the committed
+    replacements (untouched keys and closed intervals are kept, touched
+    keys' open intervals recomputed from a small window), then the committed
     table read back. Oracle = the same one-shot lead-window SQL as
     scd2_history — the invariant is batch-incremental == one-shot."""
     from .operators.scd2_table import Scd2Table

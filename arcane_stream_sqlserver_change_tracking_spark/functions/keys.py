@@ -58,17 +58,10 @@ def bucket_expr(merge_key: str | Column, num_buckets: int) -> Column:
     """Stable bucket id for a merge key: ``pmod(hash(mk), N)`` —
     Spark's Murmur3, the SAME function hashpartitioning uses.
 
-    Two consequences:
-
-    * determinism across sessions/versions (murmur3 seed 42 is the
-      basis of Spark's on-disk bucketed tables), so files written under
-      bucket b in one run are correctly pruned in every later run (same
-      contract as Iceberg's bucket transform, docs/crd.md:115);
-    * **shuffle alignment**: after any ``groupBy(mk)`` with P shuffle
-      partitions, shuffle partition id == ``pmod(hash(mk), P)``; when
-      N divides P, every shuffle partition maps to exactly ONE bucket,
-      so bucket-partitioned writes of aggregated batches need no second
-      shuffle (verified: 0 mismatches; see plans/lake.py aligned path).
+    Deterministic across sessions/versions (murmur3 seed 42 is the
+    basis of Spark's on-disk bucketed tables), so files written under
+    bucket b in one run are correctly pruned in every later run (same
+    contract as Iceberg's bucket transform, docs/crd.md:115).
     """
     col = F.col(merge_key) if isinstance(merge_key, str) else merge_key
     return F.pmod(F.hash(col), F.lit(num_buckets)).cast("int")

@@ -17,13 +17,15 @@ the merge is equivalent to::
     result   = retained ∪ upserts
 
 which is how we compute the new content of the *touched buckets only*
-(plans/lake.py prunes the scan and the rewrite to those buckets).
+(plans/lake.py prunes the scan and the rewrite to those buckets, and
+writes that content as one DataFrame, one file per bucket).
 
 Physical strategy at scale: the batch (and its key set) is tiny relative
-to the table, so both the anti-join and nothing else need a table-side
-shuffle — we broadcast the batch keys when the deduped batch is under
+to the table, so the anti-join needs no table-side shuffle — we
+broadcast the batch keys when the deduped batch is under
 ``broadcast_threshold`` rows, giving a broadcast-hash anti-join against
-a bucket-pruned scan: zero shuffle of table data. Delete events for
+a bucket-pruned scan. The only shuffle of table data is the write's
+repartition of the touched buckets by bucket. Delete events for
 never-inserted keys are naturally no-ops (they only appear in the anti
 key set). Duplicate-key safety and D-row null payloads are handled
 upstream exactly as the reference requires (SURVEY.md §7.4).
@@ -31,20 +33,11 @@ upstream exactly as the reference requires (SURVEY.md §7.4).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.keys import MERGE_KEY_COL, OPERATION_COL, OP_DELETE
-
-
-@dataclass
-class MergePlan:
-    new_state: DataFrame   # content for the touched buckets after merge
-    upserts: DataFrame
-    retained: DataFrame
 
 
 def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -66,16 +59,16 @@ def plan_merge(
     deduped_batch: DataFrame,
     schema: T.StructType,
     broadcast_keys: bool = True,
-) -> MergePlan:
-    """Compute the post-merge content of the touched buckets.
+) -> DataFrame:
+    """The post-merge content of the touched buckets, conformed to
+    ``schema``: retained ∪ upserts.
 
     ``existing``       — current rows of the touched buckets (table schema).
     ``deduped_batch``  — exactly one row per merge key, with
                          ``sys_change_operation`` and all payload columns
                          (missing payload columns allowed — null-padded,
                          mirroring drop-column retention semantics).
-    ``schema``         — the (possibly evolved) target schema; ``retained``
-                         and ``upserts`` are both conformed to it.
+    ``schema``         — the (possibly evolved) target schema.
     """
     keys = deduped_batch.select(MERGE_KEY_COL)
     if broadcast_keys:
@@ -85,5 +78,4 @@ def plan_merge(
         deduped_batch.filter(F.col(OPERATION_COL) != F.lit(OP_DELETE)), schema)
     # the anti-join moves the key column first; conform restores order
     retained = conform(existing.join(keys, on=MERGE_KEY_COL, how="left_anti"), schema)
-    new_state = retained.unionByName(upserts)
-    return MergePlan(new_state=new_state, upserts=upserts, retained=retained)
+    return retained.unionByName(upserts)

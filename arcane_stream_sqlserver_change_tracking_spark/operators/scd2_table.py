@@ -23,8 +23,9 @@ Table layout (the scale story):
 * A batch touches O(its keys) buckets. The apply reads ONLY those
   buckets and splits their rows with one broadcast probe of the batch
   key set: rows of untouched keys AND — the load-bearing invariant —
-  every CLOSED interval of touched keys pass through retained (no
-  shuffle on write: the aligned CoW path). Because the watermark guard
+  every CLOSED interval of touched keys are kept as they are and
+  rewritten with the recomputed rows, one file per bucket (the same
+  CoW write as the Type-1 MERGE). Because the watermark guard
   makes every batch version strictly greater than every stored
   version, history below the frontier is immutable — a new event can
   only close a key's OPEN interval and append after it, never reshape
@@ -50,7 +51,7 @@ payload)``; a closed interval whose close version opens no other
 interval of the same key was closed by a DELETE at that version, which
 is re-synthesized — the interval↔event mapping is a bijection, so
 untouched keys would reconstruct bit-identically (and are therefore
-retained without recompute).
+kept without recompute).
 """
 
 from __future__ import annotations
@@ -73,6 +74,8 @@ from ..functions.keys import (
     with_merge_key,
 )
 from .scd2 import IS_CURRENT_COL, VALID_FROM_COL, VALID_TO_COL, scd2_history
+
+_HIT = "__batch_key"
 
 
 @dataclass
@@ -204,16 +207,18 @@ class Scd2Table:
         rows_in = sum(int(r["rows"]) for r in stats)
 
         existing = self.table.read(buckets=touched, snapshot_id=base.snapshot_id)
-        batch_keys = F.broadcast(batch.select(MERGE_KEY_COL).distinct())
-        untouched = existing.join(batch_keys, on=MERGE_KEY_COL, how="left_anti")
-        touched_rows = existing.join(batch_keys, on=MERGE_KEY_COL, how="left_semi")
+        batch_keys = F.broadcast(
+            batch.select(MERGE_KEY_COL).distinct().withColumn(_HIT, F.lit(True))
+        )
+        probed = existing.join(batch_keys, on=MERGE_KEY_COL, how="left")
         # immutable-history fast path (see module doc): batch versions
         # are strictly above the watermark, hence above every stored
         # version — closed intervals of touched keys cannot change and
-        # ride the retained (aligned, zero-shuffle) part; only the open
-        # interval per touched key enters the window
-        closed = touched_rows.filter(F.col(VALID_TO_COL).isNotNull())
-        open_rows = touched_rows.filter(F.col(VALID_TO_COL).isNull())
+        # are kept as they are, with every row of untouched keys; only
+        # the open interval per touched key enters the window
+        is_open = F.col(_HIT).isNotNull() & F.col(VALID_TO_COL).isNull()
+        kept = probed.filter(~is_open)
+        open_rows = probed.filter(is_open).drop(_HIT)
 
         events = self._intervals_to_events(open_rows).unionByName(
             batch.select(
@@ -246,11 +251,7 @@ class Scd2Table:
             for r in stats
         ]
         self.table.replace_buckets(
-            parts=[
-                (untouched.select(*cols), True),   # aligned: no shuffle
-                (closed.select(*cols), True),      # immutable history: ditto
-                (recomputed.select(*cols), False),  # O(batch): open ∪ events
-            ],
+            kept.select(*cols).unionByName(recomputed.select(*cols)),
             buckets=touched,
             watermark={
                 "version": max_version,
@@ -259,6 +260,7 @@ class Scd2Table:
             },
             lineage=lineage,
             base=base,
+            incoming_rows=max(int(r["rows"]) for r in stats),
         )
         return Scd2BatchResult(
             seq, rows_in, max_version, len(touched), time.monotonic() - t0

@@ -37,8 +37,7 @@ the engine provides the same guarantees itself:
   stand-in for that CAS.
 * **bucket partitioning on the merge key** — every data file belongs to
   one bucket of ``pmod(murmur3(arcane_merge_key), num_buckets)`` (Spark's
-  ``F.hash``, the same function hashpartitioning uses — see
-  functions/keys.bucket_expr for why that alignment matters); the hash
+  ``F.hash``, see functions/keys.bucket_expr); the hash
   function NAME is recorded in table properties and validated on open,
   so a table written under a different bucketing can never be silently
   merged into (see ``BucketHashMismatchError``). Mirrors the reference
@@ -46,12 +45,18 @@ the engine provides the same guarantees itself:
   (docs/crd.md:115). A MERGE batch touching k buckets reads and rewrites
   ONLY those buckets — per-batch cost scales with batch locality, not
   table size. This is the property that keeps copy-on-write viable at
-  100 TB.
+  100 TB. Every write hash-repartitions its rows by bucket, so a commit
+  writes one file per touched bucket (more only past
+  ``max_rows_per_file``) and compaction finds nothing to merge after it.
 * **parquet bloom filters on equality columns** — table property
   ``parquet_bloom_filter_columns`` (default: the merge key), the
   reference's ``parquetBloomFilterColumns`` target-table property
   (docs/crd.md:124-128): point lookups and MERGE key probes skip row
-  groups whose bloom filter excludes the key.
+  groups whose bloom filter excludes the key. Each bitset is sized for
+  the rows its file can hold: a bucket replacement bounds them by the
+  largest touched bucket's manifest rows plus the batch's largest
+  per-bucket row count; an append or backfill shard, which has no count
+  without a job, by the file row cap.
 * **schema evolution with field ids** — additive-only, like the
   reference (SchemaMigrationTests.scala:160-251): added columns get new
   field ids; old data files simply lack the column and the reader
@@ -707,41 +712,31 @@ class LakeTable:
     # ------------------------------------------------------------------
     def _write_parts(
         self,
-        parts: list[tuple[DataFrame, bool]],
+        df: DataFrame,
         snapshot_id: int,
         max_rows_per_file: int | None = None,
         sort_within: list[str] | None = None,
         properties: dict[str, Any] | None = None,
         dirname: str | None = None,
+        rows_per_bucket: int | None = None,
     ) -> list[dict[str, Any]]:
-        """Write ``parts`` (each must match the table schema) into
-        per-bucket parquet files and return manifest entries. One write
-        job for any mix of parts: the union (a narrow op — partitions
-        concatenate) feeds a single partitioned write straight into a
-        fresh per-snapshot directory. No renames follow — the write IS
-        final; nothing is visible until a commit references the files.
+        """Write ``df`` (must match the table schema) into per-bucket
+        parquet files and return manifest entries. One write job: a
+        hash-repartition by bucket (one shuffle) feeds a partitioned
+        write straight into a fresh per-snapshot directory, so every
+        bucket lands in one task and, under ``max_rows_per_file``
+        (reference staging ``maxRowsPerFile``, CRD:72-75), in one file.
+        No renames follow — the write IS final; nothing is visible
+        until a commit references the files. Optionally sorted within
+        partitions (reference ``sortedBy`` write order,
+        docs/crd.md:117-119).
 
-        ``(df, False)``: hash-repartition by bucket first (one shuffle)
-        — for new/incoming rows whose partitioning is unrelated to the
-        bucket layout. ``(df, True)``: rows that came FROM per-bucket
-        table files are already bucket-clustered, so they are only
-        sorted within partitions and the partitioned writer fans out —
-        rewriting a bucket during MERGE then moves ZERO table data
-        across the network (the difference between shuffling MBs and TBs
-        per batch at 100 TB). Optionally sorted within partitions
-        (reference ``sortedBy`` write order, docs/crd.md:117-119) and
-        capped at ``max_rows_per_file`` rows (reference staging
-        ``maxRowsPerFile``, CRD:72-75)."""
-        nb = self.num_buckets
-        shaped = []
-        for df, aligned in parts:
-            d = df.withColumn(_BUCKET, bucket_expr(MERGE_KEY_COL, nb))
-            if not aligned:
-                d = d.repartition(F.col(_BUCKET))
-            shaped.append(d)
-        out = shaped[0]
-        for d in shaped[1:]:
-            out = out.unionByName(d)
+        ``rows_per_bucket`` — an upper bound on any written bucket's
+        rows, known to the caller without a job — sizes the bloom
+        filters; without it they are sized for a full file."""
+        out = df.withColumn(
+            _BUCKET, bucket_expr(MERGE_KEY_COL, self.num_buckets)
+        ).repartition(F.col(_BUCKET))
         props = properties if properties is not None else (
             self.current_snapshot().properties if self.exists() else {}
         )
@@ -768,9 +763,12 @@ class LakeTable:
         if max_rows_per_file:
             writer = writer.option("maxRecordsPerFile", str(max_rows_per_file))
         # expected NDV sizes the bloom bitset (~1.2 bytes/key at 1% fpp):
-        # default to the file row cap so small micro-batch files carry
-        # proportionally small filters instead of a fixed 1 MiB bitset
-        ndv = props.get("bloom_filter_ndv") or max_rows_per_file or 1_000_000
+        # a file holds at most one bucket's rows and at most the row cap,
+        # so small commits carry small filters, not a 1 MiB bitset
+        # (parquet rejects an NDV of 0)
+        ndv = max_rows_per_file or 1_000_000
+        if rows_per_bucket is not None:
+            ndv = max(1, min(rows_per_bucket, ndv))
         for c in props.get("parquet_bloom_filter_columns", []):
             writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
             writer = writer.option(
@@ -900,7 +898,7 @@ class LakeTable:
 
     def replace_buckets(
         self,
-        df: DataFrame | None = None,
+        df: DataFrame,
         buckets: list[int] | None = None,
         watermark: dict[str, Any] | None = None,
         lineage: list[dict[str, Any]] | None = None,
@@ -908,19 +906,20 @@ class LakeTable:
         properties_update: dict[str, Any] | None = None,
         max_rows_per_file: int | None = None,
         sort_within: list[str] | None = None,
-        parts: list[tuple[DataFrame, bool]] | None = None,
         base: "Snapshot | None" = None,
+        incoming_rows: int = 0,
     ) -> Snapshot:
         """Commit a copy-on-write replacement of the given buckets:
-        untouched buckets keep their parent manifests (no metadata
-        rewrite), touched buckets get fresh ones. This is the physical
-        form of MERGE.
+        ``df`` is their whole new content, written one file per bucket
+        (``_write_parts``); untouched buckets keep their parent
+        manifests (no metadata rewrite), touched buckets get fresh
+        ones. This is the physical form of MERGE.
 
-        Content comes either from ``df`` (shuffled by bucket) or from
-        ``parts`` — a list of ``(dataframe, aligned)`` pairs written
-        into the same snapshot; ``aligned=True`` parts (rows re-read
-        from this table's own per-bucket files, e.g. the retained side
-        of a MERGE) skip the bucket shuffle entirely.
+        ``incoming_rows`` bounds the rows ``df`` adds to any one bucket
+        beyond what the bucket holds now (a MERGE batch's largest
+        per-bucket row count; 0 for a rewrite). With the largest touched
+        bucket's manifest row count it bounds each written bucket's
+        rows, which sizes the bloom filters.
 
         ``base`` is the snapshot the replacement CONTENT was planned
         against (Iceberg-style commit validation): a replacement's
@@ -939,10 +938,12 @@ class LakeTable:
                 f"{snap.snapshot_id} since this replacement was planned; "
                 f"re-read and re-apply"
             )
+        stored = max((int(snap.bucket_manifests.get(b, {}).get("rows", 0))
+                      for b in buckets or []), default=0)
         entries = self._write_parts(
-            parts if parts is not None else [(df, False)],
-            snap.snapshot_id + 1, max_rows_per_file, sort_within,
+            df, snap.snapshot_id + 1, max_rows_per_file, sort_within,
             properties={**snap.properties, **(properties_update or {})},
+            rows_per_bucket=stored + incoming_rows,
         )
         by_bucket = self._group_by_bucket(entries)
         for b in buckets or []:
@@ -962,7 +963,7 @@ class LakeTable:
     ) -> Snapshot:
         snap = self._require()
         entries = self._write_parts(
-            [(df, False)], snap.snapshot_id + 1, max_rows_per_file,
+            df, snap.snapshot_id + 1, max_rows_per_file,
             sort_within, properties=snap.properties,
         )
         by_bucket = self._group_by_bucket(entries)
@@ -1051,7 +1052,7 @@ class LakeTable:
             if key in state["completed"]:
                 return state["completed"][key]
         entries = self._write_parts(
-            [(df, False)],
+            df,
             snapshot_id=0,
             max_rows_per_file=max_rows_per_file,
             sort_within=sort_within,

@@ -373,10 +373,7 @@ class CdcEngine:
         diff = diff_schemas(base.schema, deduped.schema, system_columns=SYSTEM_COLS)
         existing = self.table.read(buckets=touched, snapshot_id=base.snapshot_id)
         broadcast = rows_deduped <= self.opts.broadcast_threshold_rows
-        # retained and upserts stay separate: retained rows come from
-        # this table's own per-bucket files, so their write skips the
-        # bucket shuffle (an aligned part of plans/lake.py _write_parts)
-        plan = plan_merge(existing, deduped, diff.evolved, broadcast_keys=broadcast)
+        new_state = plan_merge(existing, deduped, diff.evolved, broadcast_keys=broadcast)
 
         # per-partition lineage (FIXTURES.md §3): bucket = the stable
         # partition identity; latency measured up to commit start
@@ -390,14 +387,9 @@ class CdcEngine:
             }
             for r in bucket_stats
         ]
-        # upserts are ALSO bucket-aligned: the dedup shuffle hash-
-        # partitioned them by merge key with Spark's murmur3 — the
-        # same function bucket_expr uses — so each shuffle partition
-        # holds whole buckets and the partitioned writer fans out
-        # without another Exchange. Zero shuffles in the merge write.
         t_commit = time.monotonic()
         self.table.replace_buckets(
-            parts=[(plan.retained, True), (plan.upserts, True)],
+            new_state,
             buckets=touched,
             schema=diff.evolved if diff.changed else None,
             watermark={
@@ -409,6 +401,7 @@ class CdcEngine:
             max_rows_per_file=self.opts.max_rows_per_file,
             sort_within=list(self.opts.sort_within) or None,
             base=base,
+            incoming_rows=max((int(r["rows"]) for r in bucket_stats), default=0),
         )
         dt = time.monotonic() - t0
         return self._record(BatchResult(

@@ -47,7 +47,7 @@ def test_crash_between_write_and_commit(spark, lake_root):
     batch2 = eng._prepare(
         log.filter(F.col("sys_change_version") > 2000)
     ).drop("__b", "__n")
-    orphan_entries = table._write_parts([(batch2, False)], snapshot_id=999)
+    orphan_entries = table._write_parts(batch2, snapshot_id=999)
     assert orphan_entries and len(os.listdir(table.data_dir)) > n_files_before
 
     # readers are unaffected: current snapshot and state are unchanged
@@ -544,6 +544,59 @@ def test_crash_point_matrix(spark, lake_root, monkeypatch, scenario, point):
                   for f in table.snapshot(s).files}
     on_disk = {
         os.path.relpath(os.path.join(d, n), table.root)
+        for d, _, names in os.walk(table.data_dir) for n in names
+    }
+    assert on_disk <= referenced
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_compaction_crash_points(spark, lake_root, monkeypatch, point):
+    """A crash at every sub-step of a K7 compaction commit: readers see
+    the old or the compacted snapshot with the same rows, the watermark
+    never moves, a restarted maintenance pass converges to one file per
+    bucket, and the orphan sweep leaves no unreferenced data file."""
+    source = _engine(spark, os.path.join(lake_root, "source"))
+    source.run_incremental(
+        synth_transcripts_changelog(spark, 1000, num_convs=20, seed=13))
+    rows = source.current_state()
+    root = os.path.join(lake_root, "compacted")
+    table = LakeTable(spark, root)
+    table.create(source.table.schema(), num_buckets=8,
+                 watermark=source.table.watermark())
+    # two appends of key-disjoint halves: two small files per bucket
+    for half in (0, 1):
+        table.append(rows.filter(F.pmod(F.col("turn_idx"), F.lit(2)) == half))
+    want = sorted_pdf(rows, OUT_COLS)
+    wm = table.watermark()
+    before = table.current_snapshot()
+    assert all(m["files"] == 2 for m in before.bucket_manifests.values())
+    eng = CdcEngine(spark, table, EngineOptions(num_buckets=8))
+
+    _arm_crash(monkeypatch, point)
+    with pytest.raises(SimulatedCrash):
+        eng.run_maintenance()
+    monkeypatch.undo()
+
+    snap = table.current_snapshot()
+    assert all(os.path.exists(os.path.join(root, f["path"])) for f in snap.files)
+    compacted = point == "after_swing"
+    assert (snap.snapshot_id != before.snapshot_id) == compacted
+    assert_tables_equal(sorted_pdf(eng.current_state(), OUT_COLS), want)
+    assert table.watermark() == wm
+
+    restarted = CdcEngine(spark, LakeTable(spark, root), EngineOptions(num_buckets=8))
+    _restart(restarted.run_maintenance)
+    assert restarted.table.rewrite_data_files() is None  # nothing left to do
+    snap = table.current_snapshot()
+    assert all(m["files"] == 1 for m in snap.bucket_manifests.values())
+    assert_tables_equal(sorted_pdf(restarted.current_state(), OUT_COLS), want)
+    assert table.watermark() == wm
+
+    table.remove_orphan_files(older_than_seconds=0)
+    referenced = {f["path"] for s in table.snapshot_log()
+                  for f in table.snapshot(s).files}
+    on_disk = {
+        os.path.relpath(os.path.join(d, n), root)
         for d, _, names in os.walk(table.data_dir) for n in names
     }
     assert on_disk <= referenced

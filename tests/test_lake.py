@@ -287,8 +287,8 @@ def test_bloom_filter_written_on_merge_key(spark, lake_root):
     readers don't expose bloom offsets; the ndv-sized bitset does)."""
     df = _df(spark, 1000)
     t1 = LakeTable(spark, os.path.join(lake_root, "bloom"))
-    t1.create(SCHEMA, num_buckets=1, properties={"bloom_filter_ndv": 10_000})
-    t1.append(df)
+    t1.create(SCHEMA, num_buckets=1)
+    t1.append(df, max_rows_per_file=10_000)
     t2 = LakeTable(spark, os.path.join(lake_root, "nobloom"))
     t2.create(SCHEMA, num_buckets=1,
               properties={"parquet_bloom_filter_columns": []})
@@ -297,6 +297,29 @@ def test_bloom_filter_written_on_merge_key(spark, lake_root):
     without = sum(e["bytes"] for e in t2.current_snapshot().files)
     # ndv=10k, fpp 1% -> ~12KiB bitset minimum
     assert with_bloom - without > 10_000
+
+
+def test_bloom_filter_sized_from_bucket_rows(spark, lake_root):
+    """A bucket replacement sizes each file's bloom bitset from the rows
+    the bucket can hold (manifest rows of the touched buckets plus the
+    incoming bound), not from the 1M-row file cap: at ~100 rows per
+    bucket every file stays far below a 1 MiB bitset, and still carries
+    a filter (larger than the same commit without bloom columns)."""
+    sizes = {}
+    for name, props in (("bloom", None),
+                        ("nobloom", {"parquet_bloom_filter_columns": []})):
+        t = LakeTable(spark, os.path.join(lake_root, name))
+        t.create(SCHEMA, num_buckets=4, properties=props)
+        t.append(_df(spark, 400))
+        base = t.current_snapshot()
+        snap = t.replace_buckets(_df(spark, 400, tag=1), sorted(base.bucket_manifests))
+        old = {f["path"] for f in base.files}
+        sizes[name] = {f["bucket"]: f["bytes"] for f in snap.files
+                       if f["path"] not in old}
+    assert sorted(sizes["bloom"]) == sorted(sizes["nobloom"]) == [0, 1, 2, 3]
+    for b, size in sizes["bloom"].items():
+        assert size < 64 * 1024
+        assert size > sizes["nobloom"][b]
 
 
 def test_concurrent_commit_conflict_detected(spark, lake_root):
@@ -478,7 +501,7 @@ def test_orphan_sweep_spares_fresh_files(spark, lake_root):
     older_than_seconds (a concurrent writer's in-flight batch)."""
     t = LakeTable(spark, lake_root)
     t.create(SCHEMA, num_buckets=2)
-    in_flight = t._write_parts([(_df(spark, 50), False)], snapshot_id=99)
+    in_flight = t._write_parts(_df(spark, 50), snapshot_id=99)
     assert in_flight
     # default threshold: fresh files untouched
     assert t.remove_orphan_files() == []

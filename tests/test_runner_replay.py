@@ -266,6 +266,36 @@ def test_maintenance_cadence_and_time_travel(spark, lake_root):
     assert old.agg(F.max("sys_change_version")).collect()[0][0] <= 1100
 
 
+def test_cdc_commit_writes_one_file_per_touched_bucket(spark, lake_root):
+    """A CDC commit writes each touched bucket's merged content (kept
+    rows and upserts) as ONE new file, so compaction has nothing to
+    merge after it. Files per bucket are read from the snapshot
+    manifests: a bucket is touched when its manifest changed, and its
+    new files are those its parent's manifest did not list."""
+    eng = make_engine(spark, lake_root, max_events_per_batch=1000)
+    log = synth_transcripts_changelog(spark, 3000, num_convs=60, seed=5)
+    results = eng.run_incremental(log, maintenance=False)
+    assert len(results) == 3
+    t = eng.table
+    ids = t.snapshot_log()
+    commits = 0
+    for parent_id, sid in zip(ids, ids[1:]):
+        parent, snap = t.snapshot(parent_id), t.snapshot(sid)
+        touched = sorted(
+            b for b in set(parent.bucket_manifests) | set(snap.bucket_manifests)
+            if (parent.bucket_manifests.get(b) or {}).get("path")
+            != (snap.bucket_manifests.get(b) or {}).get("path"))
+        if not touched:
+            continue  # metadata-only commit
+        commits += 1
+        old = {f["path"] for f in parent.files_for(touched)}
+        new = [f["bucket"] for f in snap.files_for(touched) if f["path"] not in old]
+        assert sorted(new) == touched, f"snapshot {sid}"
+    assert commits == 3
+    got = sorted_pdf(eng.current_state(), OUT_COLS)
+    assert_tables_equal(got, oracle_final_state(log.toPandas(), PAYLOAD_COLS))
+
+
 def test_metrics_jsonl_emitted(spark, lake_root):
     """A2: one JSON line per batch (applied AND skipped) under the
     table root with rows/versions/latency fields."""

@@ -107,10 +107,18 @@ def test_stream_drain_restart_exactly_once(spark, tmp_path):
     assert_tables_equal(got3, want2)
 
 
-def test_stream_runs_maintenance_and_chunks(spark, tmp_path):
+def test_stream_runs_maintenance_and_chunks(spark, tmp_path, monkeypatch):
     """A Structured-Streaming micro-batch drains like a poll: the T2
     shaper splits each 2,000-row micro-batch into 1,000-event batches,
     and the K7 maintenance cadence runs every second applied batch."""
+    maintained_at = []
+    real_maintenance = CdcEngine.run_maintenance
+
+    def recording_maintenance(self):
+        maintained_at.append(self.table.watermark()["version"])
+        return real_maintenance(self)
+
+    monkeypatch.setattr(CdcEngine, "run_maintenance", recording_maintenance)
     land_dir = str(tmp_path / "landing")
     eng = CdcEngine(
         spark,
@@ -130,9 +138,7 @@ def test_stream_runs_maintenance_and_chunks(spark, tmp_path):
     assert not q.isActive
     assert len(eng.metrics) == 4
     assert eng.table.watermark()["version"] == 4000
-    lineages = [eng.table.snapshot(i).lineage for i in eng.table.snapshot_log()]
-    assert any(entry.get("maintenance") == "rewrite_data_files"
-               for lin in lineages for entry in lin)
+    assert maintained_at == [2000, 4000]
     got = sorted_pdf(eng.current_state(), OUT_COLS)
     assert_tables_equal(got, oracle_final_state(full.toPandas(), PAYLOAD_COLS))
 
