@@ -157,7 +157,7 @@ FROM ranked WHERE rn = 1 AND sys_change_operation <> 'D'
 
 
 def q_j2_merge_as_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2: the MERGE expressed as anti-join + union, applied as
+    """J2: the MERGE (changes win per key, deletes drop it), applied as
     base(version<=5000) + incremental(version>5000). Must equal the
     one-shot replay — proving merge composition."""
     log = _events_changelog(spark, sf_dir)
@@ -165,7 +165,7 @@ def q_j2_merge_as_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = latest_change_per_key(base_log).filter(F.col(OPERATION_COL) != "D")
     changes = latest_change_per_key(log.filter(F.col(VERSION_COL) > 5000))
     base = base.select(MERGE_KEY_COL, "user_id", VERSION_COL, "event_type", "value")
-    return plan_merge(base, changes, base.schema).select(
+    return plan_merge(base, changes, base.schema, num_buckets=32).select(  # any N: same rows
         "user_id", F.col(VERSION_COL).alias("last_version"), "event_type", "value"
     )
 

@@ -38,9 +38,9 @@ OP_DELETE = "D"
 #: name of the bucket hash function this engine version writes. Recorded
 #: in table properties at create() and validated when a table is opened:
 #: files bucketed under a DIFFERENT hash would silently defeat merge's
-#: touched-bucket pruning (the anti-join would retain a key's existing
-#: rows and the table would accumulate duplicates), so a mismatch is a
-#: hard error, never a fallback.
+#: touched-bucket pruning (a key's existing rows would sit in a bucket
+#: the merge never reads, and the table would accumulate duplicates), so
+#: a mismatch is a hard error, never a fallback.
 BUCKET_HASH_NAME = "murmur3"
 
 

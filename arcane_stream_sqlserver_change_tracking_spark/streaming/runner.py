@@ -107,13 +107,6 @@ class EngineOptions:
     normalize_text_columns: tuple[str, ...] = ()  # e.g. ("text",)
     normalize_impl: str = "expr"  # "expr" (JVM codegen) | "pandas" (Arrow UDF, adds NFC)
     field_filter: FieldFilter = field(default_factory=FieldFilter)
-    broadcast_threshold_rows: int = 2_000_000     # the merge broadcasts the
-                                  # batch key set at or below this many
-                                  # deduped rows (the touched-bucket
-                                  # rewrite stays shuffle-free: table data
-                                  # never crosses the network) and
-                                  # shuffles above it (no large key set
-                                  # shipped to every executor)
     max_rows_per_file: int = 1_000_000            # maxRowsPerFile analog (CRD:72-75)
     sort_within: tuple[str, ...] = ()             # sortedBy analog (docs/crd.md:117-119)
     maintenance_interval_batches: int = 60        # reference default (yaml-example:49-52)
@@ -296,8 +289,8 @@ class CdcEngine:
         queryRetryMode, CRD:195-210) or its message contains one of
         ``retry_on_message_contents``. Every retry re-plans: it re-reads
         the table (fresh watermark, fresh touched-bucket content) and
-        re-runs only the anti-join + write — the expensive dedup result
-        is the cached ``deduped``."""
+        re-runs only the merge + write (one exchange) — the expensive
+        dedup result is the cached ``deduped``."""
         opts = self.opts
         attempt = 0
         delay = opts.retry_base_seconds
@@ -335,11 +328,13 @@ class CdcEngine:
         stale-row guard re-applies against the watermark before
         re-planning. A single-writer drain never re-guards: chunk i
         commits at most its upper bound, which is chunk i+1's
-        ``chunk_lo``. ``backfill_version`` non-None marks a merge
-        backfill: never skipped as already applied, and the commit
-        records that version as the watermark.
+        ``chunk_lo``. The merge cannot guard: its batch row wins
+        whatever the versions (a merge backfill relies on it).
+        ``backfill_version`` non-None marks a merge backfill: never
+        skipped as already applied, and the commit records that version
+        as the watermark.
 
-        The whole plan (watermark, stale guard, anti-join read) is
+        The whole plan (watermark, stale guard, touched-bucket read) is
         pinned to ONE base snapshot, and the commit validates against
         that same base — a concurrent writer landing anywhere between
         plan and commit turns this attempt into a CommitConflictError
@@ -372,8 +367,8 @@ class CdcEngine:
         # schema migration (K6): diff batch payload vs the base's schema
         diff = diff_schemas(base.schema, deduped.schema, system_columns=SYSTEM_COLS)
         existing = self.table.read(buckets=touched, snapshot_id=base.snapshot_id)
-        broadcast = rows_deduped <= self.opts.broadcast_threshold_rows
-        new_state = plan_merge(existing, deduped, diff.evolved, broadcast_keys=broadcast)
+        new_state = plan_merge(existing, deduped, diff.evolved,
+                               int(base.properties["num_buckets"]))
 
         # per-partition lineage (FIXTURES.md §3): bucket = the stable
         # partition identity; latency measured up to commit start

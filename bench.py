@@ -104,8 +104,7 @@ TRANSCRIPT_PAYLOAD = T.StructType(
 
 def run_replay(spark, num_events: int, num_buckets: int = 32,
                batches: int = 4, num_convs: int = 200_000,
-               num_partitions: int | None = None,
-               broadcast_threshold: int | None = None) -> dict:
+               num_partitions: int | None = None) -> dict:
     """Replay a deterministic synthetic transcripts changelog through
     the full engine (dedup → merge → commit per micro-batch); returns
     throughput. The changelog is generated, never materialized — the
@@ -123,11 +122,6 @@ def run_replay(spark, num_events: int, num_buckets: int = 32,
                 num_buckets=num_buckets,
                 max_events_per_batch=max(1, num_events // batches),
                 normalize_text_columns=("text",),
-                **(
-                    {"broadcast_threshold_rows": broadcast_threshold}
-                    if broadcast_threshold
-                    else {}
-                ),
             ),
         )
         eng.bootstrap(TRANSCRIPT_PAYLOAD)
@@ -204,9 +198,6 @@ def main() -> None:
                     help="fixed split/shuffle partition count; 0 = 3x cpus. "
                          "scaling_bench pins this so both levels run the identical job")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--broadcast-threshold", type=int, default=0,
-                    help="override EngineOptions.broadcast_threshold_rows "
-                         "for the replay (0 = engine default)")
     ap.add_argument("--master", default=None,
                     help="override master URL, e.g. local-cluster[4,2,8192] "
                          "(separate executor JVMs); --cpus must equal total "
@@ -223,8 +214,7 @@ def main() -> None:
         # costs tens of seconds on the first execution and would otherwise
         # be charged to the measured run
         run_replay(spark, 200_000, batches=2, num_partitions=parts)
-        out = run_replay(spark, args.events, batches=args.batches, num_partitions=parts,
-                         broadcast_threshold=args.broadcast_threshold or None)
+        out = run_replay(spark, args.events, batches=args.batches, num_partitions=parts)
         out["cpus"] = args.cpus
         print(json.dumps(out))
         spark.stop()

@@ -4,10 +4,16 @@ after insert / backfill / update / delete sequences, watermark resume
 contract, exactly-once re-drain.
 """
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from arcane_stream_sqlserver_change_tracking_spark.functions.keys import (
+    MERGE_KEY_COL,
+    bucket_expr,
+)
 from arcane_stream_sqlserver_change_tracking_spark.plans.lake import LakeTable
 from arcane_stream_sqlserver_change_tracking_spark.sources.changelog import (
     synth_transcripts_changelog,
@@ -292,6 +298,70 @@ def test_cdc_commit_writes_one_file_per_touched_bucket(spark, lake_root):
         new = [f["bucket"] for f in snap.files_for(touched) if f["path"] not in old]
         assert sorted(new) == touched, f"snapshot {sid}"
     assert commits == 3
+    got = sorted_pdf(eng.current_state(), OUT_COLS)
+    assert_tables_equal(got, oracle_final_state(log.toPandas(), PAYLOAD_COLS))
+
+
+def _exchanges(df) -> list:
+    """Exchange node names of ``df``'s physical plan, not descending into
+    cached relations (the staged dedup's own shuffle is not the
+    commit's)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()   # the initial plan, requirements applied
+    found, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if "Exchange" in node.nodeName():
+            found.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+@pytest.mark.parametrize("num_buckets", [16, 24])
+def test_cdc_commit_is_one_exchange_and_two_jobs(spark, lake_root, monkeypatch,
+                                                 num_buckets):
+    """A CDC commit merges inside the exchange the bucketed write needs:
+    the DataFrame the writer receives is hash-partitioned by bucket in
+    ONE shuffle, with no broadcast, the writer's own repartition by
+    bucket adds none, and the commit runs two Spark jobs (that shuffle's
+    map stage and the write). 16 and 24 buckets over 12 shuffle
+    partitions: the elision must not need the one to divide the other."""
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "12")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    plans, jobs = [], []
+    write_parts, replace_buckets = LakeTable._write_parts, LakeTable.replace_buckets
+
+    def recording_write(self, df, *a, **k):
+        written = df.withColumn("__b", bucket_expr(MERGE_KEY_COL, num_buckets)
+                                ).repartition(F.col("__b"))
+        plans.append((_exchanges(df), _exchanges(written)))
+        return write_parts(self, df, *a, **k)
+
+    def counted_commit(self, *a, **k):
+        group = f"cdc-commit-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            return replace_buckets(self, *a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            jobs.append(len(tracker.getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(LakeTable, "_write_parts", recording_write)
+    monkeypatch.setattr(LakeTable, "replace_buckets", counted_commit)
+    try:
+        eng = make_engine(spark, lake_root, num_buckets=num_buckets,
+                          max_events_per_batch=1000)
+        log = synth_transcripts_changelog(spark, 2000, num_convs=60, seed=5)
+        assert len(eng.run_incremental(log, maintenance=False)) == 2
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+    assert plans == [(["Exchange"], ["Exchange"])] * 2
+    assert jobs == [2, 2]
     got = sorted_pdf(eng.current_state(), OUT_COLS)
     assert_tables_equal(got, oracle_final_state(log.toPandas(), PAYLOAD_COLS))
 
